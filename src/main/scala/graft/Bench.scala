@@ -44,20 +44,11 @@ object Bench {
     try SparkEntry.queries("j07_order_count_dist")(spark, sfDir).count()
     catch { case _: Throwable => () }
     try {
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val work = java.nio.file.Files.createTempDirectory("graft_warm_").toString
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(work, "w.json"),
-        """{"k":"a","v":1}""" + "\n" + """{"k":"b","v":2}""" + "\n")
-      val q = spark.readStream
-        .schema(StructType(Seq(StructField("k", StringType), StructField("v", LongType))))
-        .json(work)
-        .groupBy("k").count()
-        .writeStream.outputMode("update").format("noop")
-        .option("checkpointLocation", s"$work/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      import spark.implicits._
+      val r = graft.streaming.Replay("graft_warm_")
+      r.stage(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), "json")
+      r.foreachBatch(spark, _.groupBy("k").count(), update = true)(
+        (b, _) => b.write.format("noop").mode("overwrite").save())
     } catch { case _: Throwable => () }
   }
 

@@ -146,13 +146,21 @@ object SqlGateway {
         val t = new Thread(r, "gateway-watchdog"); t.setDaemon(true); t
       })
 
-  /** A running gateway: the HTTP server plus the streaming-metrics
-    * listener attached for /metrics. `stop()` tears down both. */
+  /** Per-JVM gateway sequence: names each gateway's request threads. */
+  private val gwSeq = new AtomicLong(0L)
+
+  /** A running gateway: the HTTP server, its request pool and the
+    * streaming-metrics listener attached for /metrics. `stop()` tears
+    * down all three — the pool's threads are non-daemon, so a pool left
+    * running keeps the JVM alive after `main` returns. */
   final class Gateway(val server: HttpServer, spark: SparkSession,
-                      listener: PipelineMetrics.MetricsListener) {
+                      listener: PipelineMetrics.MetricsListener,
+                      pool: java.util.concurrent.ExecutorService) {
     def port: Int = server.getAddress.getPort
     def stop(): Unit = {
       server.stop(0)
+      pool.shutdown()
+      pool.awaitTermination(10, TimeUnit.SECONDS)
       spark.streams.removeListener(listener)
     }
   }
@@ -789,7 +797,8 @@ object SqlGateway {
     // SparkEntry registry name with its decision-table hints (oracle
     // flag, operator family, scale caveat); POST /entries/<name> runs
     // it against the gateway's fixture dir under the same
-    // job-group/timeout/limit discipline as /sql. The listing is
+    // job-group/timeout/limit discipline as /sql; a result cut at the
+    // limit carries an `X-Graft-Truncated: limit=<N>` header. The listing is
     // GET-only (405 otherwise); execution is
     // POST-ONLY (405 on GET), mirroring /sql: several entries run
     // multi-minute streaming jobs and write temp dirs, and a GET that
@@ -835,9 +844,14 @@ object SqlGateway {
                 timedOut.set(true); sc.cancelJobGroupAndFutureJobs(group)
               }
             }, timeoutSec.toLong, TimeUnit.SECONDS)
-            try respond(ex, 200,
-              fn(spark, dir).toJSON.take(limit).mkString("", "\n", "\n"))
-            catch {
+            try {
+              // one row past the cap tells a full answer from a cut one
+              val rows = fn(spark, dir).toJSON
+                .take(if (limit == Int.MaxValue) limit else limit + 1)
+              if (rows.length > limit)
+                ex.getResponseHeaders.set("X-Graft-Truncated", s"limit=$limit")
+              respond(ex, 200, rows.take(limit).mkString("", "\n", "\n"))
+            } catch {
               case _: Throwable if timedOut.get() =>
                 respond(ex, 408,
                   s"""{"error":"entry cancelled after $timeoutSec s (timeout)"}""" + "\n")
@@ -1033,9 +1047,13 @@ object SqlGateway {
 
     // small fixed pool: concurrent ad-hoc readers share the ONE Spark
     // session (thread-safe; jobs run FIFO through the scheduler)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    val gw = gwSeq.incrementAndGet()
+    val threads = new AtomicLong(0L)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4,
+      (r: Runnable) => new Thread(r, s"gateway-$gw-request-${threads.incrementAndGet()}"))
+    server.setExecutor(pool)
     server.start()
-    new Gateway(server, spark, listener)
+    new Gateway(server, spark, listener, pool)
   }
 
   /** `runMain graft.SqlGateway <sfDir> [port]` — register + serve until

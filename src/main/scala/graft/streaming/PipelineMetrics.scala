@@ -247,10 +247,8 @@ object PipelineMetrics {
     * rows = the difference. */
   def observedQuality(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val work = tempDir("graft_m02_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
-    Tables.clicks(s, dir).select(
+    val r = Replay("graft_m02_")
+    r.stage(Tables.clicks(s, dir).select(
         col("event_id").cast("string").as("event_id"),
         col("user_id").cast("string").as("user_id"),
         unix_millis(col("ts")).as("ts"),
@@ -261,27 +259,20 @@ object PipelineMetrics {
       .select(when(
           get_json_object(col("value"), "$.event_id").cast("long") % 100 === 0,
           concat(lit("corrupt::"), col("value"))).otherwise(col("value")).as("value"))
-      .coalesce(4).write.text(inDir)
-
-    val raw = s.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType))))
-      .text(inDir)
-    val observed = ClickPipeline.parseErrorFilter(
-      ClickPipeline.deserialize(raw).observe("m02_quality",
-        count(lit(1)).as("rows"),
-        count(when(col("event_id").isNull, lit(1))).as("parse_errors")))
+      .coalesce(4), "text")
 
     val listener = new ObservedQualityListener("m02_quality")
     s.streams.addListener(listener)
     try {
-      ClickPipeline.runAppendParquet(observed, outDir, ck)
+      r.append(s)(raw => ClickPipeline.parseErrorFilter(
+        ClickPipeline.deserialize(raw).observe("m02_quality",
+          count(lit(1)).as("rows"),
+          count(when(col("event_id").isNull, lit(1))).as("parse_errors"))))
       listener.awaitTerminated()
     } finally s.streams.removeListener(listener)
 
     val (rows, errs) = listener.totals
-    val sunk = s.read.parquet(outDir).count()
+    val sunk = r.output(s).count()
     Seq(
       ("parse_errors_total", errs),
       ("rows_observed_total", rows),

@@ -19,6 +19,12 @@ import graft.queries.ReferenceQueries
   *  - s02: A8–A9 keyed Welford anomaly state ≡ q17 (oracle: q17Sql)
   *  - s03: A13 raw-event sink with ingest-time stamping; row-level parity
   *
+  * Every entry runs its stream through [[Replay]], the one owner of the
+  * replay lifecycle (work dirs, idempotent staging, the stream schema,
+  * trigger, state-partition pin, output mode, the per-batch overwrite
+  * sink and the empty-input read-back); an entry here is its per-batch
+  * logic, its progress hooks and its read-back projection.
+  *
   * Watermark-flush protocol for bounded replays: a streaming window in
   * APPEND mode is emitted only once the watermark passes its end, and the
   * watermark only advances between micro-batches — so after one
@@ -33,8 +39,6 @@ import graft.queries.ReferenceQueries
   */
 object StreamingQueries {
 
-  private def tempDir(prefix: String): String = graft.WorkDirs.tempDir(prefix)
-
   /** Run independent store actions CONCURRENTLY (optimization-guide
     * §2.6 — overlap independent jobs): Spark's scheduler happily runs
     * jobs submitted from several driver threads at once, so N
@@ -46,8 +50,9 @@ object StreamingQueries {
     * actions is deliberately unspecified — every DeltaStore commit is
     * individually idempotent and crash-recoverable, so any interleaving
     * a crash exposes is a state the per-store recovery already handles
-    * (the same argument the restart specs rely on). Exceptions
-    * propagate to the caller after all actions settle. */
+    * (the same argument the restart specs rely on). After all actions
+    * settle, the first failure (in argument order) is thrown with every
+    * later one attached as suppressed — none is dropped. */
   private[graft] def inParallel(work: (() => Unit)*): Unit =
     if (work.sizeIs <= 1) work.foreach(_.apply())
     else {
@@ -62,69 +67,21 @@ object StreamingQueries {
         val futs = work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = w()
         }))
-        var first: Throwable = null
-        futs.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            if (first == null) first = e.getCause }
+        val failures = futs.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
         }
-        if (first != null) throw first
+        failures.headOption.foreach { first =>
+          failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+          throw first
+        }
       } finally pool.shutdown()
     }
 
-  /** Empty-input totality for foreachBatch read-backs (the s30–s34
-    * family): a stream over an empty incoming relation fires zero
-    * micro-batches and writes no batch parquet, so a plain
-    * `read.parquet(outDir)` would die on schema inference. When no
-    * batch file exists, return `ifEmpty` truncated to zero rows —
-    * callers pass the per-batch transform applied to an empty input,
-    * so the fallback schema is the batch output schema by
-    * construction, matching the batch operators' empty-input
-    * behavior. */
-  private def readBatchesOr(s: SparkSession, dir: String,
-                            ifEmpty: => DataFrame): DataFrame =
-    if (hasParquet(dir)) s.read.parquet(dir) else ifEmpty.limit(0)
-
-  /** True iff `dir` holds at least one COMMITTED parquet data file.
-    * Every path component under `dir` must be non-hidden: a crash
-    * during the input write leaves part-files inside Spark's
-    * `_temporary` staging tree, and counting those would make a resume
-    * skip the rewrite while the file stream (which ignores hidden
-    * dirs) sees zero committed input — a silently empty "recovery". */
-  private def hasParquet(dir: String): Boolean = {
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(dir)
-    Files.exists(root) && {
-      val st = Files.walk(root)
-      try st.iterator().asScala.exists { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_") &&
-          root.relativize(p).iterator().asScala.forall { c =>
-            val s = c.toString; !s.startsWith(".") && !s.startsWith("_")
-          }
-      } finally st.close()
-    }
-  }
-
-  /** Stamp the data files added to `dir` since the last call with an
-    * explicit, strictly increasing mtime. FileStreamSource orders files
-    * by modification time; on filesystems with coarse (e.g. 1 s) mtime
-    * granularity two sequentially written slices can tie and replay out
-    * of order — for an order-sensitive consumer (s18's watermark seal)
-    * that silently drops a slice. Explicit stamps make the replay order
-    * a property of the writer, not the filesystem clock. */
-  private def stampSliceMtime(dir: String,
-                              seen: scala.collection.mutable.Set[String],
-                              mtimeMs: Long): Unit = {
-    val files = new java.io.File(dir).listFiles()
-    if (files != null)
-      files.filter(f => f.isFile && !f.getName.startsWith(".") &&
-                        !f.getName.startsWith("_") && !seen.contains(f.getName))
-        .foreach { f =>
-          require(f.setLastModified(mtimeMs), s"cannot set mtime on $f")
-          seen += f.getName
-        }
-  }
+  /** The `[a-z0-9]+` tokenizer of the text-serving entries (s20, s35,
+    * the BM25 index and its serve, the serving-index deltas). */
+  private def toksCol: org.apache.spark.sql.Column =
+    regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
 
   /** Fixture clicks in the producer's wire shape (string ids, epoch-ms ts,
     * produce.py:127-135), one JSON object per line. */
@@ -140,29 +97,13 @@ object StreamingQueries {
     Files.writeString(Paths.get(inDir, "zz_flush_sentinel.json"), json + "\n")
   }
 
-  /** Write the wire stream as a few large line files, not one shard per
+  /** Stage the wire stream as a few large line files, not one shard per
     * core: each input file stands in for a producer batch, and 32 shards
     * of a ~100k-line fixture is all task overhead (measured 6.6 s → 0.8 s
-    * for the write, and fewer file-source tasks per micro-batch). */
-  private def writeWire(wire: DataFrame, inDir: String): Unit =
-    wire.toJSON.coalesce(4).write.text(inDir)
-
-  /** Run a bounded streaming replay with `n` state partitions.
-    *
-    * `spark.sql.shuffle.partitions` is read at query start and pinned in
-    * the checkpoint; every state partition then pays a per-micro-batch
-    * store commit (delta file + fsync), so state-partition count is a
-    * THROUGHPUT knob, not a cores knob — 32 partitions for a replay whose
-    * whole state fits in a handful of MB is pure commit overhead
-    * (measured 13.2 s → 3.7 s on the stream-stream join). Production
-    * sizing scales it with state volume; the batch plans around the
-    * streaming run keep the session's normal parallelism. */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, prev)
-  }
+    * for the write, and fewer file-source tasks per micro-batch). The
+    * append family then parses the lines ([[ClickPipeline.parse]]). */
+  private def stageWire(r: Replay, wire: DataFrame): Unit =
+    r.stage(wire.toJSON.coalesce(4), "text")
 
   /** Run the full streaming pipeline (source → watermark → windowed
     * user-grain state → checkpointed sink) and return the streamed
@@ -179,31 +120,24 @@ object StreamingQueries {
   private def runWindowedStream(s: SparkSession, dir: String, tag: String,
                                 duration: String, keys: Seq[String],
                                 restart: Boolean = false): DataFrame = {
-    val work = tempDir(s"graft_${tag}_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay(s"graft_${tag}_")
     val wire = wireJson(s, dir)
     val maxTs = wire.agg(max(col("ts"))).head.getLong(0)
-    writeWire(wire, inDir)
+    stageWire(r, wire)
 
-    def runOnce(): Unit = ClickPipeline.runAppendParquet(
-      ClickPipeline.windowedUserGrain(
-        ClickPipeline.withEventTime(ClickPipeline.fromJsonDir(s, inDir)),
-        duration, keys),
-      outDir, ck)
+    def runOnce(): Unit = r.append(s)(src => ClickPipeline.windowedUserGrain(
+      ClickPipeline.withEventTime(ClickPipeline.parse(src)), duration, keys))
 
-    withStatePartitions(s, 8) {
-      if (restart) {
-        runOnce()                                // pass 1: all real data
-        writeSentinel(inDir, maxTs + 7200000L)   // advance the watermark…
-        runOnce()                                // pass 2: restart from checkpoint, flush
-      } else {
-        writeSentinel(inDir, maxTs + 7200000L)
-        runOnce()
-      }
+    if (restart) {
+      runOnce()                                // pass 1: all real data
+      writeSentinel(r.in, maxTs + 7200000L)    // advance the watermark…
+      runOnce()                                // pass 2: restart from checkpoint, flush
+    } else {
+      writeSentinel(r.in, maxTs + 7200000L)
+      runOnce()
     }
 
-    s.read.parquet(outDir)
+    r.output(s)
       .filter(col("page") =!= "__flush__")
       .drop("created_at")
   }
@@ -259,22 +193,16 @@ object StreamingQueries {
   // never emitted; it is filtered on read-back for safety.
   // ---------------------------------------------------------------------
   def streamSessions(s: SparkSession, dir: String): DataFrame = {
-    val work = tempDir("graft_s08_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay("graft_s08_")
     val wire = wireJson(s, dir)
     val maxTs = wire.agg(max(col("ts"))).head.getLong(0)
-    writeWire(wire, inDir)
-    writeSentinel(inDir, maxTs + 7200000L)
+    stageWire(r, wire)
+    writeSentinel(r.in, maxTs + 7200000L)
 
-    withStatePartitions(s, 8) {
-      ClickPipeline.runAppendParquet(
-        graft.operators.Sessionize.sessions(
-          ClickPipeline.withEventTime(ClickPipeline.fromJsonDir(s, inDir))),
-        outDir, ck)
-    }
+    r.append(s)(src => graft.operators.Sessionize.sessions(
+      ClickPipeline.withEventTime(ClickPipeline.parse(src))))
 
-    s.read.parquet(outDir)
+    r.output(s)
       .filter(col("user_id") =!= "u0")
       .groupBy(col("n_events").as("events_per_session"))
       .agg(count("*").as("n_sessions"),
@@ -295,25 +223,14 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{TextFunctions => TF}
-    val work = tempDir("graft_s09_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
-    Tables.documents(s, dir).coalesce(1).write.parquet(inDir)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(schema).parquet(inDir)
-      .withColumn("fp", TF.fingerprint(col("text")))
+    val r = Replay("graft_s09_")
+    r.stage(Tables.documents(s, dir).coalesce(1))
+    r.append(s)(_.withColumn("fp", TF.fingerprint(col("text")))
       .withColumn("n_tokens",
         TF.tokenCount(TF.normalized(col("text"))).cast("long"))
       .select("fp", "n_tokens")
-      .dropDuplicates("fp")
-
-    withStatePartitions(s, 8) {
-      ClickPipeline.runAppendParquet(stream, outDir, ck)
-    }
-    s.read.parquet(outDir).select("fp", "n_tokens").orderBy("fp")
+      .dropDuplicates("fp"))
+    r.output(s).select("fp", "n_tokens").orderBy("fp")
   }
 
   val streamDedupSql: String =
@@ -330,24 +247,17 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   def streamCuration(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Curation
-    val work = tempDir("graft_s12_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
-    Tables.documents(s, dir).coalesce(1).write.parquet(inDir)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = s.readStream.schema(schema).parquet(inDir)
-      .filter(Curation.keepRule(col("text")))
-      .withColumn("aug", Curation.contactAugmented(col("text"), col("doc_id")))
-    val curated = Curation.scrubPii(stream, col("aug"))
-      .select(col("doc_id"), col("source"),
-        (col("n_emails") + col("n_ips") + col("n_phones")).as("n_redactions"),
-        length(col("scrubbed")).cast("long").as("scrubbed_len"))
-
-    ClickPipeline.runAppendParquet(curated, outDir, ck)
-    s.read.parquet(outDir)
+    val r = Replay("graft_s12_")
+    r.stage(Tables.documents(s, dir).coalesce(1))
+    r.append(s) { src =>
+      val stream = src.filter(Curation.keepRule(col("text")))
+        .withColumn("aug", Curation.contactAugmented(col("text"), col("doc_id")))
+      Curation.scrubPii(stream, col("aug"))
+        .select(col("doc_id"), col("source"),
+          (col("n_emails") + col("n_ips") + col("n_phones")).as("n_redactions"),
+          length(col("scrubbed")).cast("long").as("scrubbed_len"))
+    }
+    r.output(s)
       .select("doc_id", "source", "n_redactions", "scrubbed_len")
       .orderBy("doc_id")
   }
@@ -361,23 +271,17 @@ object StreamingQueries {
   // into its 5 member windows explicitly (minute_floor − k, k ∈ 0..4).
   // ---------------------------------------------------------------------
   def streamSlidingAgg(s: SparkSession, dir: String): DataFrame = {
-    val work = tempDir("graft_s13_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay("graft_s13_")
     val wire = wireJson(s, dir)
     val maxTs = wire.agg(max(col("ts"))).head.getLong(0)
-    writeWire(wire, inDir)
-    writeSentinel(inDir, maxTs + 7200000L)
+    stageWire(r, wire)
+    writeSentinel(r.in, maxTs + 7200000L)
 
-    val agg = ClickPipeline.withEventTime(ClickPipeline.fromJsonDir(s, inDir))
+    r.append(s)(src => ClickPipeline.withEventTime(ClickPipeline.parse(src))
       .groupBy(window(col("ts"), "5 minutes", "1 minute").as("w"), col("page"))
       .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").as("window_start"), col("page"), col("cnt"))
-
-    withStatePartitions(s, 8) {
-      ClickPipeline.runAppendParquet(agg, outDir, ck)
-    }
-    s.read.parquet(outDir)
+      .select(col("w.start").as("window_start"), col("page"), col("cnt")))
+    r.output(s)
       .filter(col("page") =!= "__flush__")
       .select(unix_millis(col("window_start")).as("window_start_ms"),
               col("page"), col("cnt"))
@@ -405,26 +309,22 @@ object StreamingQueries {
   // bounded replay complete and batch-oracle-comparable.
   // ---------------------------------------------------------------------
   def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val work = tempDir("graft_s11_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-    writeWire(wireJson(s, dir), inDir)
+    val r = Replay("graft_s11_")
+    stageWire(r, wireJson(s, dir))
 
-    def side(eventType: String, prefix: String) =
-      ClickPipeline.fromJsonDir(s, inDir)
-        .filter(col("page") === eventType)
-        .select(col("user_id").as(s"${prefix}_user"),
-                col("ts").as(s"${prefix}_ts"))
-        .withWatermark(s"${prefix}_ts", "10 seconds")
-
-    val joined = side("view", "v").join(side("purchase", "p"),
-      expr("""v_user = p_user
-             |AND p_ts > v_ts
-             |AND p_ts <= v_ts + interval 1 hour""".stripMargin))
-
-    withStatePartitions(s, 8) {
-      ClickPipeline.runAppendParquet(joined, outDir, ck)
+    r.append(s) { src =>
+      val clicks = ClickPipeline.parse(src)
+      def side(eventType: String, prefix: String) =
+        clicks.filter(col("page") === eventType)
+          .select(col("user_id").as(s"${prefix}_user"),
+                  col("ts").as(s"${prefix}_ts"))
+          .withWatermark(s"${prefix}_ts", "10 seconds")
+      side("view", "v").join(side("purchase", "p"),
+        expr("""v_user = p_user
+               |AND p_ts > v_ts
+               |AND p_ts <= v_ts + interval 1 hour""".stripMargin))
     }
-    s.read.parquet(outDir)
+    r.output(s)
       .select(col("v_user").cast("long").as("user_id"),
               unix_millis(col("v_ts")).as("view_ms"),
               unix_millis(col("p_ts")).as("purchase_ms"))
@@ -447,36 +347,22 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   def streamAnomaly(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val work = tempDir("graft_s02_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay("graft_s02_")
     // Input stream = the canonical per-minute agg table (what A8 re-keys).
     // One parquet file ⇒ one micro-batch ⇒ each key's full history reaches
     // the state function together, in window order after the batch sort.
-    ReferenceQueries.minuteAgg(s, dir)
+    r.stage(ReferenceQueries.minuteAgg(s, dir)
       .select(unix_millis(col("window_start")).as("window_start_ms"),
               col("page"), col("country"), col("cnt"))
-      .coalesce(1)
-      .write.parquet(inDir)
-
-    val inputSchema = StructType(Seq(
-      StructField("window_start_ms", LongType),
-      StructField("page", StringType),
-      StructField("country", StringType),
-      StructField("cnt", LongType)))
-    val stream = s.readStream.schema(inputSchema).parquet(inDir)
-      .as[AnomalyDetector.AggRow]
-
-    withStatePartitions(s, 8) {
-      ClickPipeline.runAppendParquet(AnomalyDetector.detect(stream).toDF(), outDir, ck)
-    }
+      .coalesce(1))
+    r.append(s)(src => AnomalyDetector.detect(src.as[AnomalyDetector.AggRow]).toDF())
 
     // mean is exact on both sides (sum/n over integer counts — see
     // WelfordState); z_score involves the M2 accumulator, where Welford
     // and DuckDB's var_samp agree only to ~1e-14 — which can straddle the
     // driver's 9-significant-digit canonicalization — so it is rounded to
     // 6 decimals on BOTH sides.
-    s.read.parquet(outDir)
+    r.output(s)
       .select(col("window_start_ms"), col("page"), col("country"), col("cnt"),
               col("n"), col("mean"),
               round(col("z_score"), 6).as("z_score"), col("is_anomaly"))
@@ -495,16 +381,14 @@ object StreamingQueries {
   // s03 — raw-event sink (A13): stream → parquet append + created_at stamp
   // ---------------------------------------------------------------------
   def streamRawSink(s: SparkSession, dir: String): DataFrame = {
-    val work = tempDir("graft_s03_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
-    writeWire(wireJson(s, dir), inDir)
+    val r = Replay("graft_s03_")
+    stageWire(r, wireJson(s, dir))
     // No aggregation ⇒ no watermark needed: every event is appended in
     // pass 1; created_at is the ingest stamp (excluded from the compared
     // columns — it is wall-clock by design, clickhouse_tables.sql:14).
-    ClickPipeline.runAppendParquet(ClickPipeline.fromJsonDir(s, inDir), outDir, ck)
+    r.append(s)(ClickPipeline.parse)
 
-    s.read.parquet(outDir)
+    r.output(s)
       .groupBy(col("page"))
       .agg(count("*").as("events"),
            count_distinct(col("user_id")).as("unique_users"),
@@ -533,20 +417,13 @@ object StreamingQueries {
   // exactly-once batch relation.
   // ---------------------------------------------------------------------
   def streamDedupWatermark(s: SparkSession, dir: String): DataFrame = {
-    val work = tempDir("graft_s14_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay("graft_s14_")
     val wire = wireJson(s, dir)
-    writeWire(wire.unionAll(wire.filter(col("event_id").cast("long") % 10 === 0)),
-      inDir)
+    stageWire(r, wire.unionAll(wire.filter(col("event_id").cast("long") % 10 === 0)))
 
-    val dedup = ClickPipeline.withEventTime(ClickPipeline.fromJsonDir(s, inDir))
-      .dropDuplicatesWithinWatermark("event_id")
-
-    withStatePartitions(s, 8) {
-      ClickPipeline.runAppendParquet(dedup, outDir, ck)
-    }
-    s.read.parquet(outDir)
+    r.append(s)(src => ClickPipeline.withEventTime(ClickPipeline.parse(src))
+      .dropDuplicatesWithinWatermark("event_id"))
+    r.output(s)
       .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("ts_ms"),
               col("page"), col("referrer"), col("country"), col("device"))
       .orderBy(col("event_id").cast("long"))
@@ -577,34 +454,14 @@ object StreamingQueries {
   def streamPrioritySample(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Curation
     import graft.functions.TopKAggregator
-    val work = tempDir("graft_s17_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay("graft_s17_")
     // several input files ⇒ several micro-batches ⇒ the heap genuinely
     // accumulates across triggers (not a single-batch degenerate run)
-    Tables.documents(s, dir).repartition(4).write.parquet(inDir)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val keyed = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
+    r.stage(Tables.documents(s, dir).repartition(4))
+    r.mapBatches(s, update = true, query = _
       .select(col("lang"), col("doc_id"), Curation.priorityKey("doc_id").as("skey"))
-    val agg = keyed.groupBy(col("lang"))
-      .agg(TopKAggregator.topk(25)(col("skey"), col("doc_id")).as("tk"))
-
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    s.read.parquet(outDir)
+      .groupBy(col("lang"))
+      .agg(TopKAggregator.topk(25)(col("skey"), col("doc_id")).as("tk")))(identity)
       .groupBy(col("lang"))
       .agg(max_by(col("tk"), col("batch")).as("tk"))
       .select(col("lang"), posexplode(col("tk")).as(Seq("__pos", "__s")))
@@ -625,51 +482,26 @@ object StreamingQueries {
   def streamFunnel(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Funnel, FunnelEvent}
     import graft.queries.ExtendedQueries.{FunnelSteps, FunnelWindowUs}
-    val work = tempDir("graft_s18_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay("graft_s18_")
     val ev = Tables.events(s, dir).select(
       col("user_id").cast("long").as("user_id"),
       unix_micros(col("ts")).as("ts_us"),
       col("event_id").cast("long").as("event_id"),
       col("event_type"))
-    // 4 chronological slices with non-overlapping ts ranges, mtime-stamped
-    // in write order so the file source replays them in event-time order
-    // and the watermark never late-drops.
+    // 4 chronological slices with non-overlapping ts ranges, staged in
+    // order so the file source replays them in event-time order and the
+    // watermark never late-drops.
     val cuts = ev.stat.approxQuantile("ts_us", Array(0.25, 0.5, 0.75), 0.0)
     val edges = Long.MinValue +: cuts.map(_.toLong) :+ Long.MaxValue
-    val seen = scala.collection.mutable.Set.empty[String]
-    val base = System.currentTimeMillis() - 3600000L
-    edges.sliding(2).zipWithIndex.foreach { case (pair, i) =>
-      ev.filter(col("ts_us") > pair(0) && col("ts_us") <= pair(1))
-        .coalesce(1).write.mode("append").json(inDir)
-      stampSliceMtime(inDir, seen, base + i * 60000L)
-    }
+    r.stageOrdered(edges.toSeq.sliding(2).map(pair =>
+      ev.filter(col("ts_us") > pair(0) && col("ts_us") <= pair(1))).toSeq)
 
-    val schema = StructType(Seq(
-      StructField("user_id", LongType), StructField("ts_us", LongType),
-      StructField("event_id", LongType), StructField("event_type", StringType)))
     import s.implicits._
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .json(inDir)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", "10 seconds")
-      .as[FunnelEvent]
-    val levels = Funnel.streamFunnel(stream, FunnelSteps, FunnelWindowUs)
-      .toDF("user_id", "funnel_level")
-
-    withStatePartitions(s, 8) {
-      val q = levels.writeStream.outputMode("update")
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    s.read.parquet(outDir)
+    r.mapBatches(s, update = true, query = src => Funnel.streamFunnel(
+        src.withColumn("ts", timestamp_micros(col("ts_us")))
+          .withWatermark("ts", "10 seconds")
+          .as[FunnelEvent], FunnelSteps, FunnelWindowUs)
+      .toDF("user_id", "funnel_level"))(identity)
       .groupBy("user_id")
       .agg(max_by(col("funnel_level"), col("batch")).as("funnel_level"))
       .orderBy("user_id")
@@ -684,43 +516,20 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   def streamRetention(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{DayEvent, Funnel}
-    val work = tempDir("graft_s19_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay("graft_s19_")
     // hash-sliced (NOT time-sliced): a user's earliest event often lands
     // in a later batch, forcing the retro-active cohort reassignment path
     val ev = Tables.events(s, dir).select(
       col("user_id").cast("long").as("user_id"),
       unix_micros(col("ts")).as("ts_us"))
-    val seen = scala.collection.mutable.Set.empty[String]
-    val base = System.currentTimeMillis() - 3600000L
-    (0 until 4).foreach { i =>
-      ev.filter(pmod(xxhash64(col("ts_us")), lit(4)) === i)
-        .coalesce(1).write.mode("append").json(inDir)
-      stampSliceMtime(inDir, seen, base + i * 60000L)
-    }
+    r.stageOrdered((0 until 4).map(i =>
+      ev.filter(pmod(xxhash64(col("ts_us")), lit(4)) === i)))
 
-    val schema = StructType(Seq(
-      StructField("user_id", LongType), StructField("ts_us", LongType)))
     import s.implicits._
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .json(inDir).as[DayEvent]
-    val snaps = Funnel.streamRetention(stream)
-      .toDF("user_id", "cohort_idx", "day_idx")
-
-    withStatePartitions(s, 8) {
-      val q = snaps.writeStream.outputMode("update")
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
     // keep each user's LAST snapshot only, then roll up the matrix
-    val emitted = s.read.parquet(outDir)
+    val emitted = r.mapBatches(s, update = true, query = src =>
+      Funnel.streamRetention(src.as[DayEvent])
+        .toDF("user_id", "cohort_idx", "day_idx"))(identity)
     val last = emitted.groupBy("user_id").agg(max("batch").as("batch"))
     emitted.join(last, Seq("user_id", "batch"))
       .groupBy(col("cohort_idx"), (col("day_idx") - col("cohort_idx")).as("day_offset"))
@@ -743,41 +552,18 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   def streamSketchHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.MisraGriesAggregator
-    val work = tempDir("graft_s20_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
+    val r = Replay("graft_s20_")
     val k = graft.queries.CurationQueries.MgK // shared with x53's oracle threshold
 
-    Tables.documents(s, dir).repartition(4).write.parquet(inDir)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val toksStream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .select(col("lang"),
-        explode(regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0)))
-          .as("token"))
-    val agg = toksStream.groupBy(col("lang"))
-      .agg(MisraGriesAggregator.mg(k)(col("token")).as("mg"))
-
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    val cands = s.read.parquet(outDir)
+    r.stage(Tables.documents(s, dir).repartition(4))
+    val cands = r.mapBatches(s, update = true, query = _
+      .select(col("lang"), explode(toksCol).as("token"))
+      .groupBy(col("lang"))
+      .agg(MisraGriesAggregator.mg(k)(col("token")).as("mg")))(identity)
       .groupBy(col("lang")).agg(max_by(col("mg"), col("batch")).as("mg"))
       .select(col("lang"), explode(col("mg")).as("s"))
       .select(col("lang"), col("s.id").as("token"))
-    val toks = Tables.documents(s, dir).select(col("lang"),
-      explode(regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0)))
-        .as("token"))
+    val toks = Tables.documents(s, dir).select(col("lang"), explode(toksCol).as("token"))
     val exact = toks.join(broadcast(cands), Seq("lang", "token"), "left_semi")
       .groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
     val totals = toks.groupBy("lang").agg(count(lit(1)).as("n"))
@@ -796,30 +582,20 @@ object StreamingQueries {
   // kept. Streamed enriched aggregate ≡ the batch join oracle.
   // ---------------------------------------------------------------------
   def streamStaticJoin(s: SparkSession, dir: String): DataFrame = {
-    val work = tempDir("graft_s23_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
+    val r = Replay("graft_s23_")
     val ev = Tables.events(s, dir).select(
       col("event_id"), col("user_id").cast("long").as("user_id"),
       expr("unix_micros(ts) DIV 86400000000").as("day_idx"),
       col("event_type"))
     // the static dimension: per-user first-seen day (computed batch-side)
     val dim = ev.groupBy("user_id").agg(min("day_idx").as("first_day"))
-    ev.repartition(2).write.parquet(inDir)
+    r.stage(ev.repartition(2))
 
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("day_idx", LongType), StructField("event_type", StringType)))
-    val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
+    r.mapBatches(s, query = _
       .join(broadcast(dim), "user_id") // stream-static: stateless per batch
       .withColumn("is_first_day", (col("day_idx") === col("first_day")).cast("int"))
-
-    ClickPipeline.runAppendParquet(
-      stream.select(col("event_id"), col("user_id"), col("event_type"),
-        col("first_day"), col("is_first_day")),
-      outDir, ck)
-    s.read.parquet(outDir)
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("first_day"), col("is_first_day")))(identity)
       .groupBy(col("event_type"), col("first_day"))
       .agg(count(lit(1)).as("n_events"),
            sum(col("is_first_day")).cast("long").as("n_on_first_day"))
@@ -887,8 +663,7 @@ object StreamingQueries {
                                    threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.TextKernels.word_shingles
-    val work = tempDir("graft_s25_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
+    val r = Replay("graft_s25_")
     def shArr(text: org.apache.spark.sql.Column) =
       array_distinct(word_shingles(text, 3))
 
@@ -919,14 +694,10 @@ object StreamingQueries {
       .sortWithinPartitions("sh")
       .localCheckpoint()
 
-    incoming.select(col("doc_id"), col("text"))
-      .repartition(3).write.parquet(inDir)
+    r.stage(incoming.select(col("doc_id"), col("text")).repartition(3))
 
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
+    // the candidate chain runs in the streaming plan, per micro-batch
+    r.mapBatches(s, query = _
       // a micro-batch arrives as ONE file and the file source maps it to
       // ONE input partition, so without this exchange the shingle kernel
       // + explode run SERIAL per batch (measured: ~8 s single-task
@@ -943,13 +714,10 @@ object StreamingQueries {
       .withColumn("jaccard", col("inter").cast("double") /
         (size(col("in_sh")).cast("long") + size(col("ref_sh")) - col("inter")))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_in"), col("id_ref"), col("jaccard"))
-
-    ClickPipeline.runAppendParquet(stream, outDir, ck)
-    // project away the sink's created_at/batch stamps BEFORE distinct —
-    // wall-clock stamps differ per duplicate emission and would defeat
-    // the collapse
-    s.read.parquet(outDir).select("id_in", "id_ref", "jaccard")
+      .select(col("id_in"), col("id_ref"), col("jaccard")))(identity)
+      // project away the sink's batch stamp BEFORE distinct — a pair
+      // emitted in two batches must collapse
+      .select("id_in", "id_ref", "jaccard")
       .distinct().orderBy("id_in", "id_ref")
   }
 
@@ -981,43 +749,23 @@ object StreamingQueries {
   private[graft] def spanCleanStream(s: SparkSession, incoming: DataFrame,
                                      reference: DataFrame, n: Int): DataFrame = {
     import graft.operators.Dedup
-    val work = tempDir("graft_s26_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
+    val r = Replay("graft_s26_")
 
     val refGrams = reference
       .select(explode(graft.functions.TextKernels.word_gram_seq(col("text"), n)).as("sh"))
       .distinct()
       .localCheckpoint() // feeds every micro-batch; pin once
 
-    incoming.select(col("doc_id"), col("text"))
-      .repartition(3).write.parquet(inDir)
+    r.stage(incoming.select(col("doc_id"), col("text")).repartition(3))
 
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        // NOTE on the one-file-one-partition input (s25's floor): the
-        // same batch-sized repartition was TRIED here and measured a
-        // net loss — 30× wall flat (21.7 → 21.4 s; the serial per-doc
-        // stages are off the critical path, which is batch/commit
-        // overhead), 1× wall +2 s (the exchange plus 32 output files
-        // per batch instead of a few). s26's 30× posture stands at
-        // 4.4× wall / exactly-linear shuffle / zero state without it.
-        Dedup.crossSpanCleanAgainst(b, refGrams, "doc_id", "text", n)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    readBatchesOr(s, outDir,
-        Dedup.crossSpanCleanAgainst(incoming.select(col("doc_id"), col("text")),
-          refGrams, "doc_id", "text", n))
+    // NOTE on the one-file-one-partition input (s25's floor): the same
+    // batch-sized repartition was TRIED here and measured a net loss —
+    // 30× wall flat (21.7 → 21.4 s; the serial per-doc stages are off
+    // the critical path, which is batch/commit overhead), 1× wall +2 s
+    // (the exchange plus 32 output files per batch instead of a few).
+    // s26's 30× posture stands at 4.4× wall / exactly-linear shuffle /
+    // zero state without it.
+    r.mapBatches(s)(Dedup.crossSpanCleanAgainst(_, refGrams, "doc_id", "text", n))
       .select("doc_id", "cleaned_text", "kept_tokens", "removed_tokens")
       .orderBy("doc_id")
   }
@@ -1058,21 +806,13 @@ object StreamingQueries {
                                         onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.functions.{TextFunctions => TF}
-    val work = workDir.getOrElse(tempDir("graft_s30_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"
-    val idsDir = s"$work/ids"; val ck = s"$work/ck"
+    val r = Replay("graft_s30_", workDir)
+    val idsDir = s"${r.dir}/ids"
 
     val oldFp = old.select(col("doc_id"), TF.fingerprint(col("text")).as("fp_old"))
       .localCheckpoint() // feeds every micro-batch + the removal pass; pin once
 
-    if (!hasParquet(inDir))
-      neu.select(col("doc_id"), col("text")).repartition(3).write.parquet(inDir)
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
+    r.stage(neu.select(col("doc_id"), col("text")).repartition(3))
 
     // the per-batch added/changed verdict, factored so the empty-input
     // read-back fallback shares its exact output schema
@@ -1086,24 +826,19 @@ object StreamingQueries {
     def fpOf(b: DataFrame): DataFrame =
       b.select(col("doc_id"), TF.fingerprint(col("text")).as("fp_new"))
 
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        val fp = fpOf(b)
-          .localCheckpoint() // feeds the delta AND the seen-id record
-        delta(fp).write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        fp.select("doc_id").write.mode("overwrite").parquet(s"$idsDir/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    r.foreachBatch(s) { (b, id) =>
+      onBatch(id)
+      val fp = fpOf(b)
+        .localCheckpoint() // feeds the delta AND the seen-id record
+      r.emit(delta(fp), id)
+      r.emit(fp.select("doc_id"), id, idsDir)
+    }
 
-    val seenIds = readBatchesOr(s, idsDir, old.select(col("doc_id")))
+    val seenIds = r.readBack(s, idsDir)(_.select("doc_id"))
     val removed = oldFp
       .join(seenIds.select("doc_id"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), lit("removed").as("status"))
-    readBatchesOr(s, outDir, delta(fpOf(neu)))
+    r.readBack(s)(b => delta(fpOf(b)))
       .select(col("doc_id"), col("status"))
       .unionAll(removed)
       .orderBy("doc_id")
@@ -1166,13 +901,11 @@ object StreamingQueries {
                                                 onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.functions.{TextFunctions => TF}
-    val work = workDir.getOrElse(tempDir("graft_s34_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"
-    val idsDir = s"$work/ids"; val ck = s"$work/ck"
-    // table names derive from the unique temp path (the s21 rule): two
+    val r = Replay("graft_s34_", workDir)
+    val work = r.dir; val idsDir = s"$work/ids"
+    // table names derive from the unique work dir (the s21 rule): two
     // invocations in one shared session never collide in the catalog
-    val tag = new java.io.File(work).getName.replaceAll("[^A-Za-z0-9_]", "_")
-    val oldTbl = s"${tag}_oldfp"
+    val oldTbl = s"${r.tag}_oldfp"
 
     // the WHOLE store-table lifecycle sits in try/finally: a crash in
     // the stream, the removal pass, or a per-batch write must not leak
@@ -1183,34 +916,19 @@ object StreamingQueries {
       old.select(col("doc_id"), TF.fingerprint(col("text")).as("fp_old")),
       s"$work/wh/oldfp", oldTbl)
 
-    if (!hasParquet(inDir))
-      neu.select(col("doc_id"), col("text")).repartition(3).write.parquet(inDir)
+    r.stage(neu.select(col("doc_id"), col("text")).repartition(3))
 
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        val batchTbl = s"${tag}_b$id"
-        try {
-          writeFpBucketed(
-            b.select(col("doc_id"), TF.fingerprint(col("text")).as("fp_new")),
-            s"$work/wh/b$id", batchTbl)
-          bucketedDelta(s, batchTbl, oldTbl)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          s.table(batchTbl).select("doc_id")
-            .write.mode("overwrite").parquet(s"$idsDir/batch=$id")
-        } finally s.sql(s"DROP TABLE IF EXISTS $batchTbl") // hygiene even on crash
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    r.foreachBatch(s) { (b, id) =>
+      onBatch(id)
+      val batchTbl = s"${r.tag}_b$id"
+      try {
+        writeFpBucketed(
+          b.select(col("doc_id"), TF.fingerprint(col("text")).as("fp_new")),
+          s"$work/wh/b$id", batchTbl)
+        r.emit(bucketedDelta(s, batchTbl, oldTbl), id)
+        r.emit(s.table(batchTbl).select("doc_id"), id, idsDir)
+      } finally s.sql(s"DROP TABLE IF EXISTS $batchTbl") // hygiene even on crash
+    }
 
     // removals: one anti-join of the old store's buckets against the
     // stream's own seen-id record (never the incoming snapshot as a
@@ -1221,14 +939,13 @@ object StreamingQueries {
     // in a long-lived shared session leaked one `${tag}_oldfp` catalog
     // entry plus its warehouse files (per-batch tables already get
     // DROP TABLE hygiene inside the foreachBatch).
-    val seenIds = readBatchesOr(s, idsDir, old.select(col("doc_id")))
+    val seenIds = r.readBack(s, idsDir)(_.select("doc_id"))
     s.table(oldTbl)
       .join(seenIds.select("doc_id"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), lit("removed").as("status"))
       .write.mode("overwrite").parquet(s"$work/removed")
     } finally s.sql(s"DROP TABLE IF EXISTS $oldTbl")
-    readBatchesOr(s, outDir, old.select(col("doc_id"),
-        lit("added").as("status")))
+    r.readBack(s)(_.select(col("doc_id"), lit("added").as("status")))
       .select(col("doc_id"), col("status"))
       .unionAll(s.read.parquet(s"$work/removed"))
       .orderBy("doc_id")
@@ -1276,29 +993,11 @@ object StreamingQueries {
     * the condition under which the scan exposes the sortBy ordering
     * and the per-batch SMJ reads the store WITHOUT re-sorting it
     * (multi-file buckets force a full static-side sort every
-    * micro-batch — measured 2× the s25 wall at 30× before this). */
-  /** The s36 blocking-store layout knob (the r14 "scan-bytes boundary"
-    * escape route made code): `bucketed` (default) stores blk bucketed
-    * by sh — exchange-free SMJ per batch, but every batch READS the
-    * whole store (no runtime bucket pruning in Spark); `partitioned`
-    * stores blk partitioned by the 2-char shingle prefix `shp`
-    * (≤ ~1.4k partitions on [a-z0-9 ]²) so DYNAMIC PARTITION PRUNING
-    * from the broadcast batch side cuts scan BYTES per batch to the
-    * partitions the batch's shingles actually touch. A/B receipts in
-    * COVERAGE.md round-15. */
-  private[graft] def s36Layout(s: SparkSession): String =
-    s.conf.get("spark.graft.s36.layout", "bucketed")
-
-  /** The partitioned-layout writer: one file per shp partition (the
-    * repartition keys rows by shp so each task owns whole partitions —
-    * the small-file bound is the partition count itself). */
-  private[graft] def writeShPartitionedBy(df: DataFrame, path: String,
-                                          tbl: String): Unit =
-    df.withColumn("shp", substring(col("sh"), 1, 2))
-      .repartition(col("shp"))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("shp").saveAsTable(tbl)
-
+    * micro-batch — measured 2× the s25 wall at 30× before this).
+    * (A blk store PARTITIONED by the 2-char shingle prefix, for dynamic
+    * partition pruning, was measured and rejected in COVERAGE.md
+    * round-15: any batch touched all ~31 prefixes, so DPP pruned
+    * nothing while the layout forfeited the sortBy merge.) */
   private[graft] def writeBucketedBy(df: DataFrame, path: String,
                                      tbl: String, key: String): Unit = {
     df.repartition(S36Buckets, col(key))
@@ -1387,42 +1086,6 @@ object StreamingQueries {
       .select(col("id_in"), col("id_ref"), col("jaccard"))
   }
 
-  /** The `partitioned`-layout per-batch delta: the blk store carries a
-    * 2-char shingle-prefix partition column, the exploded batch side
-    * (micro-batch-sized by construction) is BROADCAST, and dynamic
-    * partition pruning derives the shp filter from the broadcast build
-    * side — the store scan reads only the partitions this batch's
-    * shingles touch, cutting scan BYTES where the bucketed layout's
-    * semi-prune could only cut merge ROWS. No semi-prune and no batch
-    * pin here: when the batch side broadcasts it emits only matching
-    * rows by itself. The batch side is deliberately NOT hint-forced:
-    * the exploded side carries the in_sh arrays (S² bytes per doc), so
-    * a forced broadcast OOMs the moment a trigger delivers a
-    * corpus-share-sized batch (measured: the 100× harness leg died on
-    * "Not enough memory to build and broadcast") — let AQE broadcast
-    * real streaming-sized batches and fall back to SMJ otherwise.
-    * MEASURED VERDICT (COVERAGE round-15): on this corpus class the
-    * layout is REJECTED — the 2-char prefix space is ~31 values and
-    * any batch blankets it, so DPP prunes nothing while the layout
-    * forfeits the bucketed scan's sortBy merge; it stays behind the
-    * flag as the documented negative receipt. */
-  private[graft] def partitionedNearDupDelta(s: SparkSession, batch: DataFrame,
-                                             blkTbl: String, refTbl: String,
-                                             threshold: Double): DataFrame = {
-    val b = batch
-      .select(col("id_in"), col("in_sh"), explode(col("in_sh")).as("sh"))
-      .withColumn("shp", substring(col("sh"), 1, 2))
-    s.table(blkTbl)
-      .join(b, Seq("shp", "sh"))
-      .join(s.table(refTbl), "id_ref")
-      .withColumn("inter",
-        size(array_intersect(col("in_sh"), col("ref_sh"))).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("in_sh")).cast("long") + size(col("ref_sh")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_in"), col("id_ref"), col("jaccard"))
-  }
-
   /** Engage the per-batch store-scan semi-prune only once the blocking
     * store is big enough to pay for the per-batch broadcast build +
     * batch pin: same-session A/B at the crossover's two sides measured
@@ -1437,7 +1100,7 @@ object StreamingQueries {
     *
     * `workDir`/`onBatch`: the same restart-recovery hooks as s34.
     * Passing the SAME workDir resumes from its checkpoint — the input
-    * write is guarded by hasParquet, and the two store builds are
+    * staging is idempotent, and the two store builds are
     * overwrite-mode idempotent (they rebuild on resume because the
     * try/finally below drops the tables even when the stream crashes;
     * in production the tables persist across processes and the build
@@ -1451,10 +1114,8 @@ object StreamingQueries {
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.TextKernels.word_shingles
-    val work = workDir.getOrElse(tempDir("graft_s36_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-    val tag = new java.io.File(work).getName.replaceAll("[^A-Za-z0-9_]", "_")
-    val refTbl = s"${tag}_ref"; val blkTbl = s"${tag}_blk"
+    val r = Replay("graft_s36_", workDir)
+    val refTbl = s"${r.tag}_ref"; val blkTbl = s"${r.tag}_blk"
     val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     def shArr(text: org.apache.spark.sql.Column) =
       array_distinct(word_shingles(text, 3))
@@ -1469,7 +1130,6 @@ object StreamingQueries {
     // tokenize+shingle scan (plans are trees). The two writes hit
     // disjoint roots and the input staging reads only `incoming`, so
     // all three run concurrently (§2.6).
-    val layout = s36Layout(s)
     val refShingles = reference
       .select(col("doc_id").as("id_ref"), shArr(col("text")).as("ref_sh"))
       .localCheckpoint()
@@ -1479,56 +1139,32 @@ object StreamingQueries {
       .filter(col("__df") <= refCap)
       .select(col("sh"), col("id_ref"))
     inParallel(
-      () => writeBucketedBy(refShingles, s"$work/wh/ref", refTbl, "id_ref"),
-      () => if (layout == "partitioned")
-        writeShPartitionedBy(blkRows, s"$work/wh/blk", blkTbl)
-      else
-        writeBucketedBy(blkRows, s"$work/wh/blk", blkTbl, "sh"),
-      () => if (!hasParquet(inDir))
-        // overwrite, not ErrorIfExists: hasParquet=false with the dir
-        // present means a crash mid-write left only _temporary — the
-        // guard already proved no committed data is being discarded, and
-        // the default mode would abort the resume with "path exists"
-        incoming.select(col("doc_id"), col("text"))
-          .repartition(3).write.mode("overwrite").parquet(inDir))
+      () => writeBucketedBy(refShingles, s"${r.dir}/wh/ref", refTbl, "id_ref"),
+      () => writeBucketedBy(blkRows, s"${r.dir}/wh/blk", blkTbl, "sh"),
+      () => r.stage(incoming.select(col("doc_id"), col("text")).repartition(3)))
 
     // the store-size gate for the per-batch scan prune: one blk count
-    // per STREAM (not per batch), decided before the first trigger.
-    // Partitioned layout never row-prunes — DPP prunes scan bytes and
-    // the BroadcastHashJoin emits only matches by itself.
-    val prune = layout != "partitioned" && s.table(blkTbl).count() >= pruneFloor
+    // per STREAM (not per batch), decided before the first trigger
+    val prune = s.table(blkTbl).count() >= pruneFloor
 
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        // one file per micro-batch = ONE input partition: fan the
-        // row-local shingle kernel out before it runs (s25's floor).
-        // When pruning, the shingled batch feeds TWO consumers (the
-        // semi-join build side and the main join side) — pin it so the
-        // repartition + kernel run once per batch, not twice (unpinned,
-        // the doubled build subplan measured a 1.8× wall regression at
-        // 30× that the pin fully recovers)
-        val shingled0 = b.repartition(nPart)
-          .select(col("doc_id").as("id_in"), shArr(col("text")).as("in_sh"))
-        val shingled = if (prune) shingled0.localCheckpoint() else shingled0
-        val delta =
-          if (layout == "partitioned")
-            partitionedNearDupDelta(s, shingled, blkTbl, refTbl, threshold)
-          else
-            bucketedNearDupDelta(s, shingled, blkTbl, refTbl, threshold, prune)
-        delta.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    r.mapBatches(s, onBatch = onBatch) { b =>
+      // one file per micro-batch = ONE input partition: fan the
+      // row-local shingle kernel out before it runs (s25's floor).
+      // When pruning, the shingled batch feeds TWO consumers (the
+      // semi-join build side and the main join side) — pin it so the
+      // repartition + kernel run once per batch, not twice (unpinned,
+      // the doubled build subplan measured a 1.8× wall regression at
+      // 30× that the pin fully recovers)
+      val shingled0 = b.repartition(nPart)
+        .select(col("doc_id").as("id_in"), shArr(col("text")).as("in_sh"))
+      val shingled = if (prune) shingled0.localCheckpoint() else shingled0
+      bucketedNearDupDelta(s, shingled, blkTbl, refTbl, threshold, prune)
+    }
+      // the delta rows are already (id_in, id_ref, jaccard); a candidate
+      // matched via k shared shingles emitted k identical rows —
+      // collapse them, as s25 does
+      .select("id_in", "id_ref", "jaccard")
+      .distinct().orderBy("id_in", "id_ref")
     } finally {
       // the result reads only the per-batch parquet deltas — the store
       // tables can be dropped here even on the failure path (in
@@ -1537,14 +1173,6 @@ object StreamingQueries {
       s.sql(s"DROP TABLE IF EXISTS $refTbl")
       s.sql(s"DROP TABLE IF EXISTS $blkTbl")
     }
-    // project away nothing: the delta rows are already (id_in, id_ref,
-    // jaccard); a candidate matched via k shared shingles emitted k
-    // identical rows — collapse them, as s25 does
-    readBatchesOr(s, outDir,
-        s.range(0).select(col("id").as("id_in"), col("id").as("id_ref"),
-          col("id").cast("double").as("jaccard")))
-      .select("id_in", "id_ref", "jaccard")
-      .distinct().orderBy("id_in", "id_ref")
   }
 
   def streamNearDupBucketed(s: SparkSession, dir: String): DataFrame = {
@@ -1618,12 +1246,9 @@ object StreamingQueries {
                                     workDir: Option[String] = None,
                                     onBatch: Long => Unit = _ => ())
       : DataFrame = {
-    import graft.functions.VectorFunctions
     import graft.operators.SimilaritySearch
-    val work = workDir.getOrElse(tempDir("graft_s37_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-    val tag = new java.io.File(work).getName.replaceAll("[^A-Za-z0-9_]", "_")
-    val idxTbl = s"${tag}_ivf"
+    val r = Replay("graft_s37_", workDir)
+    val idxTbl = s"${r.tag}_ivf"
 
     val src = items.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding"))
@@ -1641,39 +1266,19 @@ object StreamingQueries {
         () => src.select(col("vec_id"), col("embedding"),
             SimilaritySearch.argmaxCell(col("embedding"), cents).as("cell"))
           .repartition(col("cell"))
-          .write.mode("overwrite").option("path", s"$work/wh/ivf")
+          .write.mode("overwrite").option("path", s"${r.dir}/wh/ivf")
           .partitionBy("cell").saveAsTable(idxTbl),
-        () => if (!hasParquet(inDir))
-          queries.select(col("vec_id").cast("long").as("query_id"),
-              col("embedding"))
-            .repartition(3).write.mode("overwrite").parquet(inDir))
+        () => r.stage(queries.select(col("vec_id").cast("long").as("query_id"),
+            col("embedding")).repartition(3)))
 
-      val stream = s.readStream
-        .schema(StructType(Seq(StructField("query_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
-
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          onBatch(id)
-          annBatchRank(s, b.select(col("query_id"),
-              col("embedding").as("q_vec")), s.table(idxTbl), cents, nProbe, k)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      r.mapBatches(s, onBatch = onBatch)(b => annBatchRank(s,
+          b.select(col("query_id"), col("embedding").as("q_vec")),
+          s.table(idxTbl), cents, nProbe, k))
+        .select("query_id", "vec_id", "cosine", "rank")
+        .orderBy("query_id", "rank")
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $idxTbl")
     }
-    readBatchesOr(s, outDir,
-        s.range(0).select(col("id").as("query_id"), col("id").as("vec_id"),
-          col("id").cast("double").as("cosine"), col("id").cast("int").as("rank")))
-      .select("query_id", "vec_id", "cosine", "rank")
-      .orderBy("query_id", "rank")
   }
 
   def streamAnnServe(s: SparkSession, dir: String): DataFrame = {
@@ -1729,10 +1334,8 @@ object StreamingQueries {
                                    onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.operators.SimilaritySearch
-    val work = workDir.getOrElse(tempDir("graft_s45_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-    val tag = new java.io.File(work).getName.replaceAll("[^A-Za-z0-9_]", "_")
-    val idxTbl = s"${tag}_pq"
+    val r = Replay("graft_s45_", workDir)
+    val idxTbl = s"${r.tag}_pq"
 
     val src = items.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding").as("vec"))
@@ -1746,49 +1349,28 @@ object StreamingQueries {
       inParallel(
         () => SimilaritySearch.pqEncoded(src, fixedRows, nLists, m, codes, dsub)
           .repartition(col("cell"))
-          .write.mode("overwrite").option("path", s"$work/wh/pq")
+          .write.mode("overwrite").option("path", s"${r.dir}/wh/pq")
           .partitionBy("cell").saveAsTable(idxTbl),
-        () => if (!hasParquet(inDir))
-          queries.select(col("vec_id").cast("long").as("query_id"),
-              col("embedding"))
-            .repartition(3).write.mode("overwrite").parquet(inDir))
+        () => r.stage(queries.select(col("vec_id").cast("long").as("query_id"),
+            col("embedding")).repartition(3)))
 
-      val stream = s.readStream
-        .schema(StructType(Seq(StructField("query_id", LongType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
-
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          onBatch(id)
-          val qB = b.select(col("query_id"), col("embedding").as("q_vec"))
-          val probed = SimilaritySearch.pqProbed(qB, fixedRows, nLists,
-            nProbe, m, codes, dsub).localCheckpoint()
-          // batch-grain probe-cell set (≤ nLists longs) pushed as
-          // static partition filters into the code store's scan — the
-          // s37 pattern
-          val cells = probed.select("cell").distinct()
-            .collect().map(_.getLong(0)).sorted
-          val store = s.table(idxTbl)
-            .filter(col("cell").isin(cells.map(Long.box): _*))
-          SimilaritySearch.pqAdcRank(store, probed, src, qB, k, m, codes,
-              refine)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      r.mapBatches(s, onBatch = onBatch) { b =>
+        val qB = b.select(col("query_id"), col("embedding").as("q_vec"))
+        val probed = SimilaritySearch.pqProbed(qB, fixedRows, nLists,
+          nProbe, m, codes, dsub).localCheckpoint()
+        // batch-grain probe-cell set (≤ nLists longs) pushed as static
+        // partition filters into the code store's scan — the s37 pattern
+        val cells = probed.select("cell").distinct()
+          .collect().map(_.getLong(0)).sorted
+        val store = s.table(idxTbl)
+          .filter(col("cell").isin(cells.map(Long.box): _*))
+        SimilaritySearch.pqAdcRank(store, probed, src, qB, k, m, codes, refine)
+      }
+        .select("query_id", "vec_id", "cosine", "rank")
+        .orderBy("query_id", "rank")
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $idxTbl")
     }
-    readBatchesOr(s, outDir,
-        s.range(0).select(col("id").as("query_id"), col("id").as("vec_id"),
-          col("id").cast("double").as("cosine"), col("id").cast("int").as("rank")))
-      .select("query_id", "vec_id", "cosine", "rank")
-      .orderBy("query_id", "rank")
   }
 
   def streamPqServe(s: SparkSession, dir: String): DataFrame = {
@@ -1862,14 +1444,12 @@ object StreamingQueries {
       : DataFrame = {
     import graft.operators.SimilaritySearch
     import graft.store.DeltaStore
-    val work = workDir.getOrElse(
-      tempDir(if (retention) "graft_s49_" else "graft_s47_"))
-    val inDir = s"$work/in"; val ck = s"$work/ck"
+    val r = Replay(if (retention) "graft_s49_" else "graft_s47_", workDir)
 
     val src = items.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding").as("vec"))
     val (fixedRows, dsub) = SimilaritySearch.pqFixedRows(src, nLists, m, codes)
-    val codeStore = pqCodeStore(s, s"$work/store/codes", m)
+    val codeStore = pqCodeStore(s, s"${r.dir}/store/codes", m)
     // the retention-horizon scan and the corpus-sized input staging are
     // independent reads of `src` → concurrent (§2.6)
     @volatile var wFinal = Long.MinValue
@@ -1879,34 +1459,21 @@ object StreamingQueries {
         require(!r.isNullAt(0), "s49: empty corpus — no retention horizon")
         wFinal = r.getLong(0) / 4
       },
-      () => if (!hasParquet(inDir))
-        src.select(col("vec_id"), col("vec").as("embedding"))
-          .repartition(3).write.mode("overwrite").parquet(inDir))
+      () => r.stage(src.select(col("vec_id"), col("vec").as("embedding"))
+        .repartition(3)))
     val wMid = wFinal / 2
 
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        // row-local encode against the fixed quantizer — batch-grain by
-        // construction, never reads the store
-        codeStore.append(s, id, SimilaritySearch.pqEncoded(
-          b.select(col("vec_id"), col("embedding").as("vec")),
-          fixedRows, nLists, m, codes, dsub))
-        if ((id + 1) % compactEvery == 0)
-          codeStore.compact(s,
-            if (retention) _.filter(col("vec_id") >= wMid) else identity)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    r.foreachBatch(s) { (b, id) =>
+      onBatch(id)
+      // row-local encode against the fixed quantizer — batch-grain by
+      // construction, never reads the store
+      codeStore.append(s, id, SimilaritySearch.pqEncoded(
+        b.select(col("vec_id"), col("embedding").as("vec")),
+        fixedRows, nLists, m, codes, dsub))
+      if ((id + 1) % compactEvery == 0)
+        codeStore.compact(s,
+          if (retention) _.filter(col("vec_id") >= wMid) else identity)
+    }
 
     // s49's final retention merge: advance the watermark, forced (expiry
     // must run even with no new deltas since the last compaction). The
@@ -2025,7 +1592,6 @@ object StreamingQueries {
                                     whDir: String, tfTbl: String,
                                     dfTbl: String,
                                     alongside: (() => Unit)*): (Long, Double) = {
-    def toksCol = regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
     val tf = items.select(col("doc_id"), toksCol.as("toks"))
       .select(col("doc_id"), size(col("toks")).as("dl"),
         explode(col("toks")).as("token"))
@@ -2081,7 +1647,6 @@ object StreamingQueries {
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.Curation
-    def toksCol = regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
     def qt = b.select(col("query_id"), explode(toksCol).as("token")).distinct()
     val dfB = inListOrNone(qt.select("token").distinct(), inMaxTerms) match {
       case Some(toks) => dfRel.filter(col("token").isin(toks: _*))
@@ -2120,12 +1685,9 @@ object StreamingQueries {
                                      workDir: Option[String] = None,
                                      onBatch: Long => Unit = _ => ())
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.operators.Curation
-    val work = workDir.getOrElse(tempDir("graft_s38_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-    val tag = new java.io.File(work).getName.replaceAll("[^A-Za-z0-9_]", "_")
-    val tfTbl = s"${tag}_tf"; val dfTbl = s"${tag}_df"
+    val r = Replay("graft_s38_", workDir)
+    val tfTbl = s"${r.tag}_tf"; val dfTbl = s"${r.tag}_df"
     val items = docs.filter(col("doc_id") % benchMod =!= 0)
     val queries = docs.filter(col("doc_id") % benchMod === 0 &&
       col("doc_id") < Curation.BmQueryIdMax)
@@ -2137,38 +1699,18 @@ object StreamingQueries {
       // doubles flow into the shared weight expression). Query staging
       // rides the build's concurrent group (§2.6): it reads only
       // `queries`, independent of every index job.
-      val (nDocs, avgdl) = buildBm25Index(s, items, s"$work/wh", tfTbl, dfTbl,
-        () => if (!hasParquet(inDir))
-          queries.select(col("doc_id"), col("text"))
-            .repartition(3).write.mode("overwrite").parquet(inDir))
+      val (nDocs, avgdl) = buildBm25Index(s, items, s"${r.dir}/wh", tfTbl, dfTbl,
+        () => r.stage(queries.select(col("doc_id"), col("text")).repartition(3)))
 
-      val stream = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
-
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          onBatch(id)
-          bm25BatchRank(s, b.select(col("doc_id").as("query_id"),
-              col("text")), s.table(tfTbl), s.table(dfTbl), nDocs, avgdl, k)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      r.mapBatches(s, onBatch = onBatch)(b => bm25BatchRank(s,
+          b.select(col("doc_id").as("query_id"), col("text")),
+          s.table(tfTbl), s.table(dfTbl), nDocs, avgdl, k))
+        .select("query_id", "doc_id", "bm25", "rnk")
+        .orderBy("query_id", "rnk")
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $tfTbl")
       s.sql(s"DROP TABLE IF EXISTS $dfTbl")
     }
-    readBatchesOr(s, outDir,
-        s.range(0).select(col("id").as("query_id"), col("id").as("doc_id"),
-          col("id").cast("double").as("bm25"), col("id").cast("int").as("rnk")))
-      .select("query_id", "doc_id", "bm25", "rnk")
-      .orderBy("query_id", "rnk")
   }
 
   def streamBm25Serve(s: SparkSession, dir: String): DataFrame = {
@@ -2203,10 +1745,8 @@ object StreamingQueries {
                                        onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.operators.{Curation, SimilaritySearch}
-    val work = workDir.getOrElse(tempDir("graft_s39_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-    val tag = new java.io.File(work).getName.replaceAll("[^A-Za-z0-9_]", "_")
-    val tfTbl = s"${tag}_tf"; val dfTbl = s"${tag}_df"; val idxTbl = s"${tag}_ivf"
+    val r = Replay("graft_s39_", workDir)
+    val tfTbl = s"${r.tag}_tf"; val dfTbl = s"${r.tag}_df"; val idxTbl = s"${r.tag}_ivf"
     val items = docs.filter(col("doc_id") % benchMod =!= 0)
     val qDocs = docs.filter(col("doc_id") % benchMod === 0 &&
       col("doc_id") < Curation.BmQueryIdMax)
@@ -2220,64 +1760,41 @@ object StreamingQueries {
 
     try {
       // store builds — the only corpus-sized jobs (s38's + s37's). The
-      // IVF build and the query staging (guard first — its contract)
-      // are independent of every BM25 job, so both ride the build's
+      // IVF build and the query staging (fixture check first) are
+      // independent of every BM25 job, so both ride the build's
       // concurrent group (§2.6) instead of queueing behind it.
-      val (nDocs, avgdl) = buildBm25Index(s, items, s"$work/wh", tfTbl, dfTbl,
+      val (nDocs, avgdl) = buildBm25Index(s, items, s"${r.dir}/wh", tfTbl, dfTbl,
         () => srcE.filter(col("vec_id") % benchMod =!= 0)
           .select(col("vec_id"), col("embedding"),
             SimilaritySearch.argmaxCell(col("embedding"), cents).as("cell"))
           .repartition(col("cell"))
-          .write.mode("overwrite").option("path", s"$work/wh/ivf")
+          .write.mode("overwrite").option("path", s"${r.dir}/wh/ivf")
           .partitionBy("cell").saveAsTable(idxTbl),
-        () => if (!hasParquet(inDir)) {
+        () => {
           requireEvalSliceCovered(srcE, qDocs, benchMod, "s39")
-          qDocs.select(col("doc_id"), col("text"))
-            .join(srcE.select(col("vec_id").as("doc_id"), col("embedding")),
-              Seq("doc_id"), "left")
-            .repartition(3).write.mode("overwrite").parquet(inDir)
+          r.stage(servingQueries(qDocs, srcE).repartition(3))
         })
 
-      val stream = s.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType),
-          StructField("embedding", ArrayType(FloatType)))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir)
-
-      val q = stream.writeStream
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          onBatch(id)
-          val lex = bm25BatchRank(s,
-              b.select(col("doc_id").as("query_id"), col("text")),
-              s.table(tfTbl), s.table(dfTbl), nDocs, avgdl, listK)
-            .select(col("query_id"), col("doc_id"), col("rnk").as("rank"))
-          val sem = annBatchRank(s,
-              b.filter(col("embedding").isNotNull)
-                .select(col("doc_id").as("query_id"),
-                  col("embedding").as("q_vec")),
-              s.table(idxTbl), cents, nProbe, listK)
-            .select(col("query_id"), col("vec_id").as("doc_id"), col("rank"))
-          SimilaritySearch.rrfFuse(lex, sem, k0 = k0, k = k)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      r.mapBatches(s, onBatch = onBatch) { b =>
+        val lex = bm25BatchRank(s,
+            b.select(col("doc_id").as("query_id"), col("text")),
+            s.table(tfTbl), s.table(dfTbl), nDocs, avgdl, listK)
+          .select(col("query_id"), col("doc_id"), col("rnk").as("rank"))
+        val sem = annBatchRank(s,
+            b.filter(col("embedding").isNotNull)
+              .select(col("doc_id").as("query_id"),
+                col("embedding").as("q_vec")),
+            s.table(idxTbl), cents, nProbe, listK)
+          .select(col("query_id"), col("vec_id").as("doc_id"), col("rank"))
+        SimilaritySearch.rrfFuse(lex, sem, k0 = k0, k = k)
+      }
+        .select("query_id", "doc_id", "lex_rank", "sem_rank", "rrf", "rank")
+        .orderBy("query_id", "rank")
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $tfTbl")
       s.sql(s"DROP TABLE IF EXISTS $dfTbl")
       s.sql(s"DROP TABLE IF EXISTS $idxTbl")
     }
-    readBatchesOr(s, outDir,
-        s.range(0).select(col("id").as("query_id"), col("id").as("doc_id"),
-          col("id").cast("double").as("lex_rank"),
-          col("id").cast("double").as("sem_rank"),
-          col("id").cast("double").as("rrf"), col("id").cast("int").as("rank")))
-      .select("query_id", "doc_id", "lex_rank", "sem_rank", "rrf", "rank")
-      .orderBy("query_id", "rank")
   }
 
   def streamHybridServe(s: SparkSession, dir: String): DataFrame = {
@@ -2328,9 +1845,11 @@ object StreamingQueries {
     * shape at a small file count. df and corpus stats fold by exact
     * integer SUM at compaction (the s32 algebraic-partials argument);
     * postings and IVF rows are row-grain (a new doc only adds rows). */
+  private type ServingStores = (graft.store.DeltaStore, graft.store.DeltaStore,
+    graft.store.DeltaStore, graft.store.DeltaStore)
+
   private[graft] def servingDeltaStores(s: SparkSession, root: String)
-      : (graft.store.DeltaStore, graft.store.DeltaStore,
-         graft.store.DeltaStore, graft.store.DeltaStore) = {
+      : ServingStores = {
     import graft.store.DeltaStore
     val tfSchema = StructType(Seq(StructField("doc_id", LongType),
       StructField("token", StringType), StructField("tf", LongType),
@@ -2402,6 +1921,104 @@ object StreamingQueries {
       .select("query_id", "doc_id", "lex_rank", "sem_rank", "rrf", "rank")
   }
 
+  /** The query docs with their embeddings (left join — a query without
+    * an embedding ranks lexically only): the serving query relation of
+    * s39–s53. */
+  private def servingQueries(qDocs: DataFrame, srcE: DataFrame): DataFrame =
+    qDocs.select(col("doc_id"), col("text"))
+      .join(srcE.select(col("vec_id").as("doc_id"), col("embedding")),
+        Seq("doc_id"), "left")
+
+  /** The s39–s53 split of (documents, embeddings): item docs (the
+    * corpus), query docs (the eval slice), all embeddings, item
+    * embeddings. */
+  private def servingSplit(docs: DataFrame, emb: DataFrame, benchMod: Int)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val srcE = emb.select(col("vec_id").cast("long").as("vec_id"),
+      col("embedding"))
+    (docs.filter(col("doc_id") % benchMod =!= 0),
+     docs.filter(col("doc_id") % benchMod === 0 &&
+       col("doc_id") < graft.operators.Curation.BmQueryIdMax),
+     srcE, srcE.filter(col("vec_id") % benchMod =!= 0))
+  }
+
+  /** df from postings: tf rows are (doc, token)-grain, so count per
+    * token IS df (the s38 argument). */
+  private def dfOf(tf: DataFrame): DataFrame =
+    tf.groupBy("token").agg(count(lit(1)).as("df"))
+
+  /** Corpus stats from postings: n_docs = docs present in tf, sum_dl =
+    * Σ per-doc dl — exact integers. */
+  private def statsOf(tf: DataFrame): DataFrame =
+    tf.groupBy("doc_id").agg(max("dl").as("dl"))
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl"))
+
+  /** One batch's (tf, df, stats, ivf) deltas for the four serving
+    * DeltaStores (s40, s46, s50) — none of them reads a store. The
+    * batch is TOKENIZED ONCE: tf is pinned, and df and the corpus stats
+    * derive from it (each previously re-ran the regex tokenize over the
+    * batch); ivf rows are the embeddings' fixed-centroid cells. */
+  private def indexDeltas(docs: DataFrame, cents: IndexedSeq[Array[Float]])
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val tf = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), toksCol.as("toks"))
+      .select(col("doc_id"), size(col("toks")).as("dl"),
+        explode(col("toks")).as("token"))
+      .groupBy("doc_id", "token")
+      .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
+      .select("doc_id", "token", "tf", "dl")
+      .localCheckpoint()
+    (tf, dfOf(tf), statsOf(tf),
+     docs.filter(col("embedding").isNotNull)
+       .select(col("doc_id").as("vec_id"), col("embedding"),
+         graft.operators.SimilaritySearch.argmaxCell(col("embedding"), cents)
+           .as("cell")))
+  }
+
+  /** Append one batch's [[indexDeltas]] — the four appends write
+    * disjoint stores from pinned/batch inputs → concurrent (§2.6). */
+  private def appendIndexDeltas(s: SparkSession, stores: ServingStores,
+                                id: Long, docs: DataFrame,
+                                cents: IndexedSeq[Array[Float]]): Unit = {
+    val (tfStore, dfStore, statStore, ivfStore) = stores
+    val (tf, df, stats, ivf) = indexDeltas(docs, cents)
+    inParallel(
+      () => tfStore.append(s, id, tf), () => dfStore.append(s, id, df),
+      () => statStore.append(s, id, stats), () => ivfStore.append(s, id, ivf))
+  }
+
+  /** One retention merge of the serving stores at watermark `w` (s46,
+    * s50): the row-grain stores (tf, ivf) filter inside their
+    * compaction, concurrently with the caller's `alsoCompact`; `onMid`
+    * fires once every compaction committed; df and the stats then
+    * REBASE onto relations re-derived from the retained postings. Every
+    * step is the staged swap — interruptible anywhere, recovered by the
+    * next pass. The pass is bracketed by the store-group [[StoreEpoch]]
+    * so a non-owner reader (the gateway) can detect — and refuse — the
+    * window where tf/ivf are already expired but df/stats still
+    * describe the lifetime corpus (VERDICT r19 task 2). */
+  private def retentionMerge(s: SparkSession, root: String,
+                             stores: ServingStores, w: Long, force: Boolean,
+                             alsoCompact: Seq[() => Unit] = Nil,
+                             onMid: () => Unit = () => ()): Unit = {
+    val (tfStore, dfStore, statStore, ivfStore) = stores
+    graft.store.StoreEpoch.begin(s, root)
+    // the compactions touch disjoint stores → one concurrent group; both
+    // expiries must COMPLETE before the rebases read the retained tf
+    // (§2.6 overlap with an explicit barrier at the dependency)
+    inParallel(Seq(
+      () => tfStore.compact(s, _.filter(col("doc_id") >= w), force),
+      () => ivfStore.compact(s, _.filter(col("vec_id") >= w), force)) ++
+      alsoCompact: _*)
+    onMid()
+    val tfView = tfStore.read(s)
+    inParallel(
+      () => dfStore.rebase(s, dfOf(tfView)),
+      () => statStore.rebase(s, statsOf(tfView)))
+    graft.store.StoreEpoch.end(s, root)
+  }
+
   /** The s40 core. `workDir`/`onBatch`: the s34–s39 restart hooks; the
     * checkpoint plus the DeltaStores' batch-id watermarking make every
     * batch exactly-once across crash+resume (a replayed batch
@@ -2416,63 +2033,32 @@ object StreamingQueries {
                                            workDir: Option[String] = None,
                                            onBatch: Long => Unit = _ => ())
       : DataFrame = {
-    import graft.operators.{Curation, SimilaritySearch}
-    import graft.store.DeltaStore
-    val work = workDir.getOrElse(
-      tempDir(if (serveEachBatch) "graft_s43_" else "graft_s40_"))
-    val inDir = s"$work/in"; val ck = s"$work/ck"
-    val outDir = s"$work/out"
+    import graft.operators.SimilaritySearch
+    val entry = if (serveEachBatch) "s43" else "s40"
+    val r = Replay(s"graft_${entry}_", workDir)
     val stages = graft.queries.CurationQueries.AsofStages
-    def toksCol = regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
-    val items = docs.filter(col("doc_id") % benchMod =!= 0)
-    val qDocs = docs.filter(col("doc_id") % benchMod === 0 &&
-      col("doc_id") < Curation.BmQueryIdMax)
-    val srcE = emb.select(col("vec_id").cast("long").as("vec_id"),
-      col("embedding"))
-    val itemE = srcE.filter(col("vec_id") % benchMod =!= 0)
+    val (items, qDocs, srcE, itemE) = servingSplit(docs, emb, benchMod)
     val cents = SimilaritySearch.collectFixedRows(
       srcE.filter(col("vec_id") < nLists), nLists)
 
-    val (tfStore, dfStore, statStore, ivfStore) =
-      servingDeltaStores(s, s"$work/store")
+    val stores @ (tfStore, dfStore, statStore, ivfStore) =
+      servingDeltaStores(s, s"${r.dir}/store")
 
-    if (!hasParquet(inDir)) {
-      requireEvalSliceCovered(srcE, qDocs, benchMod,
-        if (serveEachBatch) "s43" else "s40")
-      // the corpus stream: item docs FULL-OUTER item embeddings, so an
-      // embedding without a document row (and vice versa) still arrives
-      val joined = items.select(col("doc_id"), col("text"))
-        .join(itemE.select(col("vec_id").as("doc_id"), col("embedding")),
-          Seq("doc_id"), "full_outer")
-      if (serveEachBatch) {
-        // s43 needs DETERMINISTIC batch contents (each serve is
-        // hash-checked against its arrived-prefix oracle), so the input
-        // is one file per stage (stage = doc_id % AsofStages), written
-        // sequentially with EXPLICIT ascending modification times —
-        // FileStreamSource orders new files by mod time, and the
-        // per-batch stage assert below makes any ordering drift loud
-        // instead of a silent hash diff
-        val h = new org.apache.hadoop.fs.Path(inDir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        h.mkdirs(new org.apache.hadoop.fs.Path(inDir))
-        (0 until stages).foreach { st =>
-          val tmp = s"$work/in_stage$st"
-          joined.filter(pmod(col("doc_id"), lit(stages.toLong)) === st)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = h.listStatus(new org.apache.hadoop.fs.Path(tmp))
-            .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-          require(part.length == 1, s"s43: stage $st wrote ${part.length} files")
-          val dst = new org.apache.hadoop.fs.Path(inDir, s"stage-$st.parquet")
-          require(h.rename(part.head, dst), s"s43: rename to $dst failed")
-          // fixed epoch base (not wall clock): only the ORDER matters,
-          // and a fixed base keeps reruns byte-stable
-          h.setTimes(dst, 1000000000000L + st * 60000L, -1)
-          h.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        }
-      } else {
-        joined.repartition(3).write.mode("overwrite").parquet(inDir)
-      }
-    }
+    requireEvalSliceCovered(srcE, qDocs, benchMod, entry)
+    // the corpus stream: item docs FULL-OUTER item embeddings, so an
+    // embedding without a document row (and vice versa) still arrives
+    val joined = items.select(col("doc_id"), col("text"))
+      .join(itemE.select(col("vec_id").as("doc_id"), col("embedding")),
+        Seq("doc_id"), "full_outer")
+    if (serveEachBatch)
+      // s43 needs DETERMINISTIC batch contents (each serve is
+      // hash-checked against its arrived-prefix oracle): one file per
+      // stage (stage = doc_id % AsofStages), staged in order — the
+      // per-batch stage assert below makes any ordering drift loud
+      // instead of a silent hash diff
+      r.stageOrdered((0 until stages).map(st =>
+        joined.filter(pmod(col("doc_id"), lit(stages.toLong)) === st)))
+    else r.stage(joined.repartition(3))
 
     // the serve: both arms against the merged base∪delta views — the
     // literal-IN / partition filters push below the union to every base
@@ -2480,86 +2066,39 @@ object StreamingQueries {
     // (serve-while-maintain), s40 once at the end, s46 over the
     // retention-filtered views — ONE definition of the serve semantics
     // for all of them (serveHybridViews).
-    def serveNow(entry: String): DataFrame =
+    def serveNow(): DataFrame =
       serveHybridViews(s, entry, tfStore.read(s), dfStore.read(s),
-        statStore.read(s), ivfStore.read(s),
-        qDocs.select(col("doc_id"), col("text"))
-          .join(srcE.select(col("vec_id").as("doc_id"), col("embedding")),
-            Seq("doc_id"), "left"),
+        statStore.read(s), ivfStore.read(s), servingQueries(qDocs, srcE),
         cents, nProbe, listK, k0, k)
 
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        // batch-grain index deltas — none of these reads a store. The
-        // batch is TOKENIZED ONCE (tf pinned): df and the corpus stats
-        // are both derived from the pinned postings (df: count per
-        // token — the s38 argument; stats: n_docs = docs present in tf,
-        // sum_dl = Σ per-doc dl — the same exact-integer derivation the
-        // s46 retention rebase runs), where each previously re-ran the
-        // regex tokenize over the batch. The four appends write
-        // disjoint stores from pinned/batch inputs → concurrent (§2.6).
-        val withText = b.filter(col("text").isNotNull)
-        val tf = withText.select(col("doc_id"), toksCol.as("toks"))
-          .select(col("doc_id"), size(col("toks")).as("dl"),
-            explode(col("toks")).as("token"))
-          .groupBy("doc_id", "token")
-          .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-          .select("doc_id", "token", "tf", "dl")
-          .localCheckpoint()
-        inParallel(
-          () => tfStore.append(s, id, tf),
-          () => dfStore.append(s, id,
-            tf.groupBy("token").agg(count(lit(1)).as("df"))),
-          () => statStore.append(s, id,
-            tf.groupBy("doc_id").agg(max("dl").as("dl"))
-              .agg(count(lit(1)).as("n_docs"),
-                coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl"))),
-          () => ivfStore.append(s, id,
-            b.filter(col("embedding").isNotNull)
-              .select(col("doc_id").as("vec_id"), col("embedding"),
-                SimilaritySearch.argmaxCell(col("embedding"), cents).as("cell"))))
-        if ((id + 1) % compactEvery == 0) inParallel(
-          () => tfStore.compact(s), () => dfStore.compact(s),
-          () => statStore.compact(s), () => ivfStore.compact(s))
-        if (serveEachBatch) {
-          // the file-order contract made loud: every batch must be
-          // exactly its stage's file (a scrambled arrival would serve a
-          // NON-prefix corpus and fail here, not as an opaque hash diff)
-          val seen = b.select(pmod(col("doc_id"), lit(stages.toLong))
-              .cast("int").as("st")).distinct()
-            .collect().map(_.getInt(0)).toSet
-          require(seen == Set(id.toInt),
-            s"s43: batch $id carried stages $seen (file order broken)")
-          serveNow("s43").withColumn("stage", lit(id.toInt))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        ()
+    r.foreachBatch(s) { (b, id) =>
+      onBatch(id)
+      appendIndexDeltas(s, stores, id, b, cents)
+      if ((id + 1) % compactEvery == 0) inParallel(
+        () => tfStore.compact(s), () => dfStore.compact(s),
+        () => statStore.compact(s), () => ivfStore.compact(s))
+      if (serveEachBatch) {
+        // the file-order contract made loud: every batch must be
+        // exactly its stage's file (a scrambled arrival would serve a
+        // NON-prefix corpus and fail here, not as an opaque hash diff)
+        val seen = b.select(pmod(col("doc_id"), lit(stages.toLong))
+            .cast("int").as("st")).distinct()
+          .collect().map(_.getInt(0)).toSet
+        require(seen == Set(id.toInt),
+          s"s43: batch $id carried stages $seen (file order broken)")
+        r.emit(serveNow().withColumn("stage", lit(id.toInt)), id)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
     if (serveEachBatch)
-      readBatchesOr(s, outDir,
-          s.range(0).select(col("id").as("query_id"), col("id").as("doc_id"),
-            col("id").cast("double").as("lex_rank"),
-            col("id").cast("double").as("sem_rank"),
-            col("id").cast("double").as("rrf"), col("id").cast("int").as("rank"),
-            col("id").cast("int").as("stage")))
+      // with no batch served, the answer is the serve over whatever the
+      // stores hold (an empty corpus fails loudly there, as s40 does)
+      r.readBack(s)(_ => serveNow().withColumn("stage", lit(0)))
         .select("stage", "query_id", "doc_id", "lex_rank", "sem_rank",
           "rrf", "rank")
         .orderBy("stage", "query_id", "rank")
     else
-      serveNow("s40").orderBy("query_id", "rank")
+      serveNow().orderBy("query_id", "rank")
   }
 
   def streamIndexMaintain(s: SparkSession, dir: String): DataFrame = {
@@ -2634,16 +2173,9 @@ object StreamingQueries {
                                         workDir: Option[String] = None,
                                         onBatch: Long => Unit = _ => ())
       : DataFrame = {
-    import graft.operators.{Curation, SimilaritySearch}
-    val work = workDir.getOrElse(tempDir("graft_s46_"))
-    val inDir = s"$work/in"; val ck = s"$work/ck"
-    def toksCol = regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
-    val items = docs.filter(col("doc_id") % benchMod =!= 0)
-    val qDocs = docs.filter(col("doc_id") % benchMod === 0 &&
-      col("doc_id") < Curation.BmQueryIdMax)
-    val srcE = emb.select(col("vec_id").cast("long").as("vec_id"),
-      col("embedding"))
-    val itemE = srcE.filter(col("vec_id") % benchMod =!= 0)
+    import graft.operators.SimilaritySearch
+    val r = Replay("graft_s46_", workDir)
+    val (items, qDocs, srcE, itemE) = servingSplit(docs, emb, benchMod)
     val cents = SimilaritySearch.collectFixedRows(
       srcE.filter(col("vec_id") < nLists), nLists)
     // the retention horizon, derived from the corpus on BOTH engines
@@ -2655,92 +2187,30 @@ object StreamingQueries {
     val wFinal = maxRow.getLong(0) / 4
     val wMid = wFinal / 2
 
-    val (tfStore, dfStore, statStore, ivfStore) =
-      servingDeltaStores(s, s"$work/store")
+    val root = s"${r.dir}/store"
+    val stores @ (tfStore, dfStore, statStore, ivfStore) =
+      servingDeltaStores(s, root)
 
-    /** One retention merge at watermark `w`: row-grain stores filter
-      * inside their compaction; df/stats rebase onto relations
-      * re-derived from the retained postings. Every step is the staged
-      * swap — interruptible anywhere, recovered by the next pass. The
-      * whole pass is bracketed by the store-group [[StoreEpoch]] so a
-      * non-owner reader (the gateway) can detect — and refuse — the
-      * window where tf/ivf are already expired but df/stats still
-      * describe the lifetime corpus (VERDICT r19 task 2). */
-    def retentionPass(w: Long, force: Boolean): Unit = {
-      graft.store.StoreEpoch.begin(s, s"$work/store")
-      // tf and ivf expire independently (disjoint stores) → concurrent;
-      // both must COMPLETE before the rebases read the retained tf
-      // (§2.6 overlap with an explicit barrier at the dependency)
-      inParallel(
-        () => tfStore.compact(s, _.filter(col("doc_id") >= w), force),
-        () => ivfStore.compact(s, _.filter(col("vec_id") >= w), force))
-      val tfView = tfStore.read(s)
-      inParallel(
-        () => dfStore.rebase(s,
-          tfView.groupBy("token").agg(count(lit(1)).as("df"))),
-        () => statStore.rebase(s,
-          tfView.groupBy("doc_id").agg(max("dl").as("dl"))
-            .agg(count(lit(1)).as("n_docs"),
-              coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl"))))
-      graft.store.StoreEpoch.end(s, s"$work/store")
+    requireEvalSliceCovered(srcE, qDocs, benchMod, "s46")
+    r.stage(items.select(col("doc_id"), col("text"))
+      .join(itemE.select(col("vec_id").as("doc_id"), col("embedding")),
+        Seq("doc_id"), "full_outer")
+      .repartition(3))
+
+    r.foreachBatch(s) { (b, id) =>
+      onBatch(id)
+      // batch-grain appends, s40's exactly (retention is
+      // merge-enforced, the ClickHouse posture: nothing is filtered
+      // at ingest — rows expire when a merge crosses the watermark)
+      appendIndexDeltas(s, stores, id, b, cents)
+      if ((id + 1) % compactEvery == 0)
+        retentionMerge(s, root, stores, wMid, force = false)
     }
-
-    if (!hasParquet(inDir)) {
-      requireEvalSliceCovered(srcE, qDocs, benchMod, "s46")
-      items.select(col("doc_id"), col("text"))
-        .join(itemE.select(col("vec_id").as("doc_id"), col("embedding")),
-          Seq("doc_id"), "full_outer")
-        .repartition(3).write.mode("overwrite").parquet(inDir)
-    }
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        // batch-grain appends, s40's exactly (retention is
-        // merge-enforced, the ClickHouse posture: nothing is filtered
-        // at ingest — rows expire when a merge crosses the watermark).
-        // One tokenize per batch (tf pinned; df + stats derived from
-        // it) and the four disjoint-store appends run concurrently —
-        // the s40 r20 optimization, same derivations.
-        val withText = b.filter(col("text").isNotNull)
-        val tf = withText.select(col("doc_id"), toksCol.as("toks"))
-          .select(col("doc_id"), size(col("toks")).as("dl"),
-            explode(col("toks")).as("token"))
-          .groupBy("doc_id", "token")
-          .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-          .select("doc_id", "token", "tf", "dl")
-          .localCheckpoint()
-        inParallel(
-          () => tfStore.append(s, id, tf),
-          () => dfStore.append(s, id,
-            tf.groupBy("token").agg(count(lit(1)).as("df"))),
-          () => statStore.append(s, id,
-            tf.groupBy("doc_id").agg(max("dl").as("dl"))
-              .agg(count(lit(1)).as("n_docs"),
-                coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl"))),
-          () => ivfStore.append(s, id,
-            b.filter(col("embedding").isNotNull)
-              .select(col("doc_id").as("vec_id"), col("embedding"),
-                SimilaritySearch.argmaxCell(col("embedding"), cents).as("cell"))))
-        if ((id + 1) % compactEvery == 0) retentionPass(wMid, force = false)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
 
     // the final retention merge advances the watermark to wFinal —
     // forced, because expiry must run even when no new deltas arrived
     // since the last compaction
-    retentionPass(wFinal, force = true)
+    retentionMerge(s, root, stores, wFinal, force = true)
 
     // serve over the retained views; the row-grain filters are no-ops
     // right after the forced merge but state the contract explicitly
@@ -2749,10 +2219,7 @@ object StreamingQueries {
         tfStore.read(s).filter(col("doc_id") >= wFinal),
         dfStore.read(s), statStore.read(s),
         ivfStore.read(s).filter(col("vec_id") >= wFinal),
-        qDocs.select(col("doc_id"), col("text"))
-          .join(srcE.select(col("vec_id").as("doc_id"), col("embedding")),
-            Seq("doc_id"), "left"),
-        cents, nProbe, listK, k0, k)
+        servingQueries(qDocs, srcE), cents, nProbe, listK, k0, k)
       .orderBy("query_id", "rank")
   }
 
@@ -2856,35 +2323,29 @@ object StreamingQueries {
     import graft.functions.{TextFunctions => TF}
     import graft.operators.{Curation, SimilaritySearch}
     import graft.store.DeltaStore
-    val work = workDir.getOrElse(tempDir("graft_s50_"))
-    val inDir = s"$work/in"; val ck = s"$work/ck"
-    def toksCol = regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
-    val items = docs.filter(col("doc_id") % benchMod =!= 0)
-    val qDocs = docs.filter(col("doc_id") % benchMod === 0 &&
-      col("doc_id") < Curation.BmQueryIdMax)
-    val srcE = emb.select(col("vec_id").cast("long").as("vec_id"),
-      col("embedding"))
-    val itemE = srcE.filter(col("vec_id") % benchMod =!= 0)
+    val r = Replay("graft_s50_", workDir)
+    val root = s"${r.dir}/store"
+    val (items, qDocs, srcE, itemE) = servingSplit(docs, emb, benchMod)
     // stream-setup one-time jobs — quantizer collect, retention-horizon
     // scan (s46's max(doc_id)//4 + s43's ascending-range determinism),
     // admission-rates pin (x132's rates verbatim — s48), gate pins, and
     // input staging — are all independent reads of the sources, except
     // that staging needs the horizon for its stage ranges; they run as
     // ONE concurrent group (§2.6) with that single dependency chained
-    // inside its lane. Values and files are byte-identical to the old
-    // sequential setup.
+    // inside its lane.
     @volatile var cents: IndexedSeq[Array[Float]] = null
     @volatile var maxId = 0L
+    @volatile var chunk = 0L // the id range of one stage = one batch
     @volatile var rates: DataFrame = null
 
-    val (tfStore, dfStore, statStore, ivfStore) =
-      servingDeltaStores(s, s"$work/store")
+    val stores @ (tfStore, dfStore, statStore, ivfStore) =
+      servingDeltaStores(s, root)
     // the durable dedup history — fingerprints only (~32 B/doc at
     // 100 TB, the FingerprintStore argument) with DeltaStore batch-id
     // exactly-once on top: a replayed batch overwrites its own delta,
     // and admission reads the store AS-OF the previous batch so the
     // replay recomputes the identical winner set
-    val fpStore = new DeltaStore(s"$work/store/fp",
+    val fpStore = new DeltaStore(s"$root/fp",
       StructType(Seq(StructField("fp", StringType))),
       (d, p) => d.repartition(4, col("fp")).sortWithinPartitions("fp")
         .write.mode("overwrite").parquet(p),
@@ -2896,7 +2357,7 @@ object StreamingQueries {
     // integer rows, exactly-once by batch id like every other delta) —
     // the pipeline's own metrics are first-class data, and s52's gated
     // report reads THEM, not a recomputation
-    val auditStore = new DeltaStore(s"$work/store/audit",
+    val auditStore = new DeltaStore(s"$root/audit",
       StructType(Seq(StructField("batch_id", LongType),
         StructField("n_input", LongType), StructField("n_admitted", LongType),
         StructField("n_winners", LongType))),
@@ -2911,7 +2372,7 @@ object StreamingQueries {
     // one delta per batch (~8 B/winner, ids only), the LSM window every
     // serving store already carries. Non-resurrection does not depend
     // on it: that is the fp store's job, spec-pinned.
-    val winnerStore = new DeltaStore(s"$work/store/winners",
+    val winnerStore = new DeltaStore(s"$root/winners",
       StructType(Seq(StructField("doc_id", LongType))),
       tinyRows, tinyRows, identity)
 
@@ -2922,30 +2383,27 @@ object StreamingQueries {
     import graft.functions.TextKernels.word_shingles
     def shArr(text: org.apache.spark.sql.Column) =
       array_distinct(word_shingles(text, 3))
-    val ndBlkStore = new DeltaStore(s"$work/store/ndblk",
+    val ndBlkStore = new DeltaStore(s"$root/ndblk",
       StructType(Seq(StructField("sh", StringType),
         StructField("doc_id", LongType))),
       (d, p) => d.repartition(4, col("sh")).sortWithinPartitions("sh")
         .write.mode("overwrite").parquet(p),
       (d, p) => d.coalesce(1).write.mode("overwrite").parquet(p),
       _.distinct())
-    val ndRefStore = new DeltaStore(s"$work/store/ndref",
+    val ndRefStore = new DeltaStore(s"$root/ndref",
       StructType(Seq(StructField("doc_id", LongType),
         StructField("sh", ArrayType(StringType)))),
       (d, p) => d.repartition(4, col("doc_id"))
         .write.mode("overwrite").parquet(p),
       (d, p) => d.coalesce(1).write.mode("overwrite").parquet(p),
       identity)
-    val quarStore = new DeltaStore(s"$work/store/quar",
+    val quarStore = new DeltaStore(s"$root/quar",
       StructType(Seq(StructField("doc_id", LongType))),
       tinyRows, tinyRows, _.distinct())
     // the gate pins, once per stream (the s48 calibration posture):
     // hot shingles (calibration df > cap) are EXCLUDED from blocking —
     // the exclusion set is the small side of the cut; and the eval
     // slice's distinct gram set for the span triage (s33's pin).
-    // Both pins and the input staging below run CONCURRENTLY (§2.6) —
-    // three independent one-time corpus jobs that otherwise serialize
-    // at stream setup; the values and files are byte-identical.
     var hotSh: DataFrame = null
     var evalGrams: DataFrame = null
     val pinJobs: Seq[() => Unit] = if (!gates) Seq.empty else Seq(
@@ -2961,40 +2419,20 @@ object StreamingQueries {
 
     /** One retention merge at watermark `w` — s46's pass plus the fp
       * store's filter-FREE compaction: dedup history must outlive index
-      * retention, or an expired winner's duplicate would re-enter. */
-    def retentionPass(w: Long, force: Boolean): Unit = {
-      // epoch-bracketed like s46's pass: a non-owner reader can refuse
-      // the tf-expired/df-not-yet-rebased window instead of serving
-      // skewed idf/avgdl (VERDICT r19 task 2)
-      graft.store.StoreEpoch.begin(s, s"$work/store")
-      // every pre-"mid" compaction touches its own store and none reads
-      // another's output → one concurrent group (§2.6), with the
-      // barrier exactly where the semantics need it: onMergeStage("mid")
-      // still fires only after ALL expiries committed and before any
-      // rebase starts, so the epoch-window spec's observable states are
-      // unchanged. Commit order inside the group is unspecified — each
-      // staged swap recovers individually (the inParallel contract).
-      inParallel(Seq(
-        () => fpStore.compact(s),
-        () => auditStore.compact(s), // metrics record: never expires
-        () => winnerStore.compact(s, _.filter(col("doc_id") >= w), force),
-        () => tfStore.compact(s, _.filter(col("doc_id") >= w), force),
-        () => ivfStore.compact(s, _.filter(col("vec_id") >= w), force)) ++
-        (if (!gates) Seq.empty[() => Unit] else Seq(
-          () => ndBlkStore.compact(s), // near-dup history outlives
-          () => ndRefStore.compact(s), // retention (the fp-store
-          () => quarStore.compact(s))): _*) // argument, s50)
-      onMergeStage("mid") // between the tf/ivf expiry and the rebases
-      val tfView = tfStore.read(s)
-      inParallel(
-        () => dfStore.rebase(s,
-          tfView.groupBy("token").agg(count(lit(1)).as("df"))),
-        () => statStore.rebase(s,
-          tfView.groupBy("doc_id").agg(max("dl").as("dl"))
-            .agg(count(lit(1)).as("n_docs"),
-              coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl"))))
-      graft.store.StoreEpoch.end(s, s"$work/store")
-    }
+      * retention, or an expired winner's duplicate would re-enter.
+      * onMergeStage("mid") fires after ALL expiries committed and
+      * before any rebase starts (the epoch-window spec's states). */
+    def retentionPass(w: Long, force: Boolean): Unit =
+      retentionMerge(s, root, stores, w, force,
+        alsoCompact = Seq(
+          () => fpStore.compact(s),
+          () => auditStore.compact(s), // metrics record: never expires
+          () => winnerStore.compact(s, _.filter(col("doc_id") >= w), force)) ++
+          (if (!gates) Seq.empty[() => Unit] else Seq(
+            () => ndBlkStore.compact(s), // near-dup history outlives
+            () => ndRefStore.compact(s), // retention (the fp-store
+            () => quarStore.compact(s))), // argument, s50)
+        onMid = () => onMergeStage("mid"))
 
     // the horizon scan feeds the staging ranges, so the two are chained
     // inside one lane; everything else in the group is independent
@@ -3002,34 +2440,15 @@ object StreamingQueries {
       val maxRow = docs.agg(max(col("doc_id"))).collect()(0)
       require(!maxRow.isNullAt(0), "s50: empty corpus — no retention horizon")
       maxId = maxRow.getLong(0)
-      val chunk = maxId / stages + 1
-      if (!hasParquet(inDir)) {
-        requireEvalSliceCovered(srcE, qDocs, benchMod, "s50")
-        val joined = items.select(col("doc_id"), col("lang"), col("text"))
-          .join(itemE.select(col("vec_id").as("doc_id"), col("embedding")),
-            Seq("doc_id"), "left")
-        val h = new org.apache.hadoop.fs.Path(inDir)
-          .getFileSystem(s.sessionState.newHadoopConf())
-        h.mkdirs(new org.apache.hadoop.fs.Path(inDir))
-        // per-stage staging writes are independent (disjoint ranges, tmp
-        // dirs and destination names; the ARRIVAL order is pinned by the
-        // explicit mtime stamps, not by write completion order) →
-        // concurrent
-        inParallel((0 until stages).map(st => () => {
-          val tmp = s"$work/in_stage$st"
-          joined.filter(col("doc_id") >= st * chunk &&
-              col("doc_id") < (st + 1) * chunk)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = h.listStatus(new org.apache.hadoop.fs.Path(tmp))
-            .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-          require(part.length == 1, s"s50: stage $st wrote ${part.length} files")
-          val dst = new org.apache.hadoop.fs.Path(inDir, s"stage-$st.parquet")
-          require(h.rename(part.head, dst), s"s50: rename to $dst failed")
-          h.setTimes(dst, 1000000000000L + st * 60000L, -1)
-          h.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          ()
-        }): _*)
-      }
+      chunk = maxId / stages + 1
+      requireEvalSliceCovered(srcE, qDocs, benchMod, "s50")
+      val joined = items.select(col("doc_id"), col("lang"), col("text"))
+        .join(itemE.select(col("vec_id").as("doc_id"), col("embedding")),
+          Seq("doc_id"), "left")
+      // ascending doc_id ranges, one file per stage, staged in order
+      r.stageOrdered((0 until stages).map(st =>
+        joined.filter(col("doc_id") >= st * chunk &&
+          col("doc_id") < (st + 1) * chunk)))
     }
     inParallel(pinJobs ++ Seq(
       horizonThenStage,
@@ -3038,189 +2457,158 @@ object StreamingQueries {
       () => rates = Curation.temperatureRates(docs).localCheckpoint()): _*)
     val wFinal = maxId / 4
     val wMid = wFinal / 2
-    val chunk = maxId / stages + 1
 
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("lang", StringType), StructField("text", StringType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        // ONE batch-head pass (r20): the arrival-order check (s43's
-        // discipline) and the audit's n_input/n_admitted counts ride
-        // the same aggregate — they were three separate batch scans.
-        // n_admitted via left join ≡ the admission's inner join + rate
-        // filter: `rates` is one row per lang, so the left join
-        // preserves row count, a null rate marks a lang with no
-        // calibration row (never admitted — null comparisons are
-        // false), and the when() applies the identical text/draw
-        // predicates.
-        val rng = b.join(broadcast(rates), Seq("lang"), "left")
-          .agg(min(col("doc_id")), max(col("doc_id")), count(lit(1)),
-            sum(when(col("text").isNotNull &&
-              (Curation.paretoUniform(Curation.TsampleSeed,
-                col("doc_id")) < col("rate")), 1L).otherwise(0L)))
-          .collect()(0)
-        if (!rng.isNullAt(0))
-          require(rng.getLong(0) >= id * chunk && rng.getLong(1) < (id + 1) * chunk,
-            s"s50: batch $id carried ids [${rng.getLong(0)}, ${rng.getLong(1)}] " +
-              s"outside its range (file order broken)")
-        val nIn = rng.getLong(2)
-        val nAdm = if (rng.isNullAt(3)) 0L else rng.getLong(3)
-        // replay of a batch the fp store already FOLDED: every store
-        // either folded this id or still holds its delta (compactions
-        // run strictly after all appends), and the pre-batch fp view
-        // needed to recompute winners no longer exists — skip straight
-        // to the scheduled merge
-        fpStore.recover(s)
-        if (fpStore.foldedUpto(s) < id) {
-          // admission — per-doc closed form against the pinned rates
-          val admitted = b.filter(col("text").isNotNull)
-            .join(broadcast(rates), "lang")
-            .filter(Curation.paretoUniform(Curation.TsampleSeed,
-              col("doc_id")) < col("rate"))
-            .select(col("doc_id"), col("text"), col("embedding"))
-          // dedup — within-batch keeper (min doc_id per fp), then one
-          // anti-join against history AS-OF the previous batch (replay-
-          // stable: the store below this id is immutable), then the
-          // winners' fps become this batch's fp delta. localCheckpoint
-          // pins the winner set across the five store writes.
-          val withFp = admitted.withColumn("fp", TF.fingerprint(col("text")))
-          val firstPer = withFp.groupBy(col("fp"))
-            .agg(min_by(struct(col("doc_id"), col("text"),
-              col("embedding")), col("doc_id")).as("__r"))
-            .select(col("fp"), col("__r.doc_id").as("doc_id"),
-              col("__r.text").as("text"), col("__r.embedding").as("embedding"))
-          val winners = firstPer
-            .join(fpStore.readOnly(s, asOf = id - 1), Seq("fp"), "left_anti")
+    r.foreachBatch(s) { (b, id) =>
+      onBatch(id)
+      // ONE batch-head pass (r20): the arrival-order check (s43's
+      // discipline) and the audit's n_input/n_admitted counts ride
+      // the same aggregate — they were three separate batch scans.
+      // n_admitted via left join ≡ the admission's inner join + rate
+      // filter: `rates` is one row per lang, so the left join
+      // preserves row count, a null rate marks a lang with no
+      // calibration row (never admitted — null comparisons are
+      // false), and the when() applies the identical text/draw
+      // predicates.
+      val rng = b.join(broadcast(rates), Seq("lang"), "left")
+        .agg(min(col("doc_id")), max(col("doc_id")), count(lit(1)),
+          sum(when(col("text").isNotNull &&
+            (Curation.paretoUniform(Curation.TsampleSeed,
+              col("doc_id")) < col("rate")), 1L).otherwise(0L)))
+        .collect()(0)
+      if (!rng.isNullAt(0))
+        require(rng.getLong(0) >= id * chunk && rng.getLong(1) < (id + 1) * chunk,
+          s"s50: batch $id carried ids [${rng.getLong(0)}, ${rng.getLong(1)}] " +
+            s"outside its range (file order broken)")
+      val nIn = rng.getLong(2)
+      val nAdm = if (rng.isNullAt(3)) 0L else rng.getLong(3)
+      // replay of a batch the fp store already FOLDED: every store
+      // either folded this id or still holds its delta (compactions
+      // run strictly after all appends), and the pre-batch fp view
+      // needed to recompute winners no longer exists — skip straight
+      // to the scheduled merge
+      fpStore.recover(s)
+      if (fpStore.foldedUpto(s) < id) {
+        // admission — per-doc closed form against the pinned rates
+        val admitted = b.filter(col("text").isNotNull)
+          .join(broadcast(rates), "lang")
+          .filter(Curation.paretoUniform(Curation.TsampleSeed,
+            col("doc_id")) < col("rate"))
+          .select(col("doc_id"), col("text"), col("embedding"))
+        // dedup — within-batch keeper (min doc_id per fp), then one
+        // anti-join against history AS-OF the previous batch (replay-
+        // stable: the store below this id is immutable), then the
+        // winners' fps become this batch's fp delta. localCheckpoint
+        // pins the winner set across the five store writes.
+        val withFp = admitted.withColumn("fp", TF.fingerprint(col("text")))
+        val firstPer = withFp.groupBy(col("fp"))
+          .agg(min_by(struct(col("doc_id"), col("text"),
+            col("embedding")), col("doc_id")).as("__r"))
+          .select(col("fp"), col("__r.doc_id").as("doc_id"),
+            col("__r.text").as("text"), col("__r.embedding").as("embedding"))
+        val winners = firstPer
+          .join(fpStore.readOnly(s, asOf = id - 1), Seq("fp"), "left_anti")
+          .localCheckpoint()
+        fpStore.append(s, id, winners.select(col("fp")))
+        onStage(id, "fp")
+        // s53's two gates (no-ops when !gates): the near-dup drop
+        // against the winner history, then the span-triage quarantine
+        // of the survivors. Replay-stable exactly like the fp gate:
+        // both history stores are read AS-OF the previous batch.
+        val survivors = if (!gates) winners else {
+          val wsh = winners
+            .select(col("doc_id"), shArr(col("text")).as("in_sh"))
+            .localCheckpoint() // feeds blocking, verify, and appends
+          // pinned: feeds the candidate join TWICE (probe side +
+          // within-batch union) and the history append — unpinned,
+          // the explode + hot-key anti-join would run three times
+          // per batch (the s25 shingled-batch pin precedent)
+          val blkBatch = wsh
+            .select(col("doc_id"), explode(col("in_sh")).as("sh"))
+            .join(hotSh, Seq("sh"), "left_anti")
             .localCheckpoint()
-          fpStore.append(s, id, winners.select(col("fp")))
-          onStage(id, "fp")
-          // s53's two gates (no-ops when !gates): the near-dup drop
-          // against the winner history, then the span-triage quarantine
-          // of the survivors. Replay-stable exactly like the fp gate:
-          // both history stores are read AS-OF the previous batch.
-          val survivors = if (!gates) winners else {
-            val wsh = winners
-              .select(col("doc_id"), shArr(col("text")).as("in_sh"))
-              .localCheckpoint() // feeds blocking, verify, and appends
-            // pinned: feeds the candidate join TWICE (probe side +
-            // within-batch union) and the history append — unpinned,
-            // the explode + hot-key anti-join would run three times
-            // per batch (the s25 shingled-batch pin precedent)
-            val blkBatch = wsh
-              .select(col("doc_id"), explode(col("in_sh")).as("sh"))
-              .join(hotSh, Seq("sh"), "left_anti")
-              .localCheckpoint()
-            // candidates: this batch's winner d vs every earlier exact
-            // winner a — prior batches from the store (ascending-id
-            // staging makes earlier-batch ≡ smaller-id), plus this
-            // batch's smaller-id winners
-            val cand = blkBatch
-              .join(ndBlkStore.readOnly(s, asOf = id - 1)
-                  .select(col("sh"), col("doc_id").as("id_ref"))
-                .unionAll(blkBatch
-                  .select(col("sh"), col("doc_id").as("id_ref"))),
-                "sh")
-              .filter(col("id_ref") < col("doc_id"))
-              .select(col("doc_id"), col("id_ref")).distinct()
-            val refArr = ndRefStore.readOnly(s, asOf = id - 1)
-              .select(col("doc_id").as("id_ref"), col("sh").as("ref_sh"))
-              .unionAll(wsh.select(col("doc_id").as("id_ref"),
-                col("in_sh").as("ref_sh")))
-            val drops = cand
-              .join(refArr, "id_ref")
-              .join(wsh, "doc_id")
-              .withColumn("inter",
-                size(array_intersect(col("in_sh"), col("ref_sh")))
-                  .cast("long"))
-              .filter(col("inter").cast("double") /
-                  (size(col("in_sh")).cast("long") + size(col("ref_sh"))
-                    - col("inter")) >= Curation.RelNdThreshold)
-              .select("doc_id").distinct()
-            // ALL exact winners enter the history — a gated-out doc's
-            // content is represented by the winner that gated it.
-            // The two history appends and the survivor pin share the
-            // "nd" crash boundary (one hook after all three) and read
-            // only pinned inputs / pre-resolved as-of views → one
-            // concurrent group; any partial state a crash exposes was
-            // already reachable and replays idempotently.
-            var surv: DataFrame = null
-            inParallel(
-              () => ndBlkStore.append(s, id, blkBatch.select("sh", "doc_id")),
-              () => ndRefStore.append(s, id,
-                wsh.select(col("doc_id"), col("in_sh").as("sh"))),
-              () => surv = winners.join(drops, Seq("doc_id"), "left_anti")
-                .localCheckpoint())
-            onStage(id, "nd")
-            quarStore.append(s, id,
-              graft.operators.Dedup.maxSharedSpanAgainst(
-                  surv.select(col("doc_id"), col("text")),
-                  evalGrams, "doc_id", "text", Curation.SpanGramN)
-                .filter(col("max_shared_tokens") >= Curation.RelQuarMinSpan)
-                .select("doc_id"))
-            onStage(id, "quar")
-            surv
-          }
-          // the audit row — n_input/n_admitted came from the batch-head
-          // aggregate; winners is pinned, so its count reads pinned
-          // blocks. The audit and winner appends share the "audit"
-          // crash boundary (one hook after both), so they run
-          // concurrently — a crash between the two was already a
-          // recoverable state (per-store idempotent replay).
-          val nWin = winners.count()
+          // candidates: this batch's winner d vs every earlier exact
+          // winner a — prior batches from the store (ascending-id
+          // staging makes earlier-batch ≡ smaller-id), plus this
+          // batch's smaller-id winners
+          val cand = blkBatch
+            .join(ndBlkStore.readOnly(s, asOf = id - 1)
+                .select(col("sh"), col("doc_id").as("id_ref"))
+              .unionAll(blkBatch
+                .select(col("sh"), col("doc_id").as("id_ref"))),
+              "sh")
+            .filter(col("id_ref") < col("doc_id"))
+            .select(col("doc_id"), col("id_ref")).distinct()
+          val refArr = ndRefStore.readOnly(s, asOf = id - 1)
+            .select(col("doc_id").as("id_ref"), col("sh").as("ref_sh"))
+            .unionAll(wsh.select(col("doc_id").as("id_ref"),
+              col("in_sh").as("ref_sh")))
+          val drops = cand
+            .join(refArr, "id_ref")
+            .join(wsh, "doc_id")
+            .withColumn("inter",
+              size(array_intersect(col("in_sh"), col("ref_sh")))
+                .cast("long"))
+            .filter(col("inter").cast("double") /
+                (size(col("in_sh")).cast("long") + size(col("ref_sh"))
+                  - col("inter")) >= Curation.RelNdThreshold)
+            .select("doc_id").distinct()
+          // ALL exact winners enter the history — a gated-out doc's
+          // content is represented by the winner that gated it.
+          // The two history appends and the survivor pin share the
+          // "nd" crash boundary (one hook after all three) and read
+          // only pinned inputs / pre-resolved as-of views → one
+          // concurrent group; any partial state a crash exposes was
+          // already reachable and replays idempotently.
+          var surv: DataFrame = null
           inParallel(
-            () => auditStore.append(s, id,
-              s.range(1).select(lit(id).as("batch_id"),
-                lit(nIn).as("n_input"), lit(nAdm).as("n_admitted"),
-                lit(nWin).as("n_winners"))),
-            () => winnerStore.append(s, id, survivors.select(col("doc_id"))))
-          onStage(id, "audit")
-          // index maintenance — s40's batch-grain deltas over the
-          // winners. One tokenize per batch: tf is PINNED and df + the
-          // corpus stats derive from it (stats: n_docs = docs present
-          // in tf, sum_dl = Σ per-doc dl — the exact-integer derivation
-          // the retention rebase below already runs), where each
-          // previously re-ran the regex tokenize over the survivors.
-          // The appends stay SEQUENTIAL here: each onStage hook is a
-          // spec-pinned crash boundary and must fire after exactly its
-          // store's commit.
-          val tf = survivors.select(col("doc_id"), toksCol.as("toks"))
-            .select(col("doc_id"), size(col("toks")).as("dl"),
-              explode(col("toks")).as("token"))
-            .groupBy("doc_id", "token")
-            .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-            .select("doc_id", "token", "tf", "dl")
-            .localCheckpoint()
-          tfStore.append(s, id, tf)
-          onStage(id, "tf")
-          dfStore.append(s, id, tf.groupBy("token").agg(count(lit(1)).as("df")))
-          onStage(id, "df")
-          statStore.append(s, id,
-            tf.groupBy("doc_id").agg(max("dl").as("dl"))
-              .agg(count(lit(1)).as("n_docs"),
-                coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl")))
-          onStage(id, "stats")
-          ivfStore.append(s, id,
-            survivors.filter(col("embedding").isNotNull)
-              .select(col("doc_id").as("vec_id"), col("embedding"),
-                SimilaritySearch.argmaxCell(col("embedding"), cents).as("cell")))
-          onStage(id, "ivf")
+            () => ndBlkStore.append(s, id, blkBatch.select("sh", "doc_id")),
+            () => ndRefStore.append(s, id,
+              wsh.select(col("doc_id"), col("in_sh").as("sh"))),
+            () => surv = winners.join(drops, Seq("doc_id"), "left_anti")
+              .localCheckpoint())
+          onStage(id, "nd")
+          quarStore.append(s, id,
+            graft.operators.Dedup.maxSharedSpanAgainst(
+                surv.select(col("doc_id"), col("text")),
+                evalGrams, "doc_id", "text", Curation.SpanGramN)
+              .filter(col("max_shared_tokens") >= Curation.RelQuarMinSpan)
+              .select("doc_id"))
+          onStage(id, "quar")
+          surv
         }
-        if ((id + 1) % compactEvery == 0) {
-          retentionPass(wMid, force = false)
-          onStage(id, "retain")
-        }
-        ()
+        // the audit row — n_input/n_admitted came from the batch-head
+        // aggregate; winners is pinned, so its count reads pinned
+        // blocks. The audit and winner appends share the "audit"
+        // crash boundary (one hook after both), so they run
+        // concurrently — a crash between the two was already a
+        // recoverable state (per-store idempotent replay).
+        val nWin = winners.count()
+        inParallel(
+          () => auditStore.append(s, id,
+            s.range(1).select(lit(id).as("batch_id"),
+              lit(nIn).as("n_input"), lit(nAdm).as("n_admitted"),
+              lit(nWin).as("n_winners"))),
+          () => winnerStore.append(s, id, survivors.select(col("doc_id"))))
+        onStage(id, "audit")
+        // index maintenance — s40's batch-grain deltas over the
+        // survivors. The appends stay SEQUENTIAL here: each onStage
+        // hook is a spec-pinned crash boundary and must fire after
+        // exactly its store's commit.
+        val (tf, df, stats, ivf) = indexDeltas(survivors, cents)
+        tfStore.append(s, id, tf)
+        onStage(id, "tf")
+        dfStore.append(s, id, df)
+        onStage(id, "df")
+        statStore.append(s, id, stats)
+        onStage(id, "stats")
+        ivfStore.append(s, id, ivf)
+        onStage(id, "ivf")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      if ((id + 1) % compactEvery == 0) {
+        retentionPass(wMid, force = false)
+        onStage(id, "retain")
+      }
+    }
 
     // the final retention merge advances the watermark to wFinal (s46)
     retentionPass(wFinal, force = true)
@@ -3234,9 +2622,9 @@ object StreamingQueries {
         .agg(coalesce(sum("n_input"), lit(0L)).as("n_input"),
           coalesce(sum("n_admitted"), lit(0L)).as("n_admitted"),
           coalesce(sum("n_winners"), lit(0L)).as("n_winners"))
-      val r = winnerStore.read(s).filter(col("doc_id") >= wFinal)
+      val w = winnerStore.read(s).filter(col("doc_id") >= wFinal)
         .agg(count(lit(1)).as("n_retained"))
-      a.crossJoin(r).select(
+      a.crossJoin(w).select(
         col("n_input"), col("n_admitted"), col("n_winners"), col("n_retained"),
         round(col("n_admitted").cast("double") / col("n_input"), 6)
           .as("admit_rate"),
@@ -3255,29 +2643,18 @@ object StreamingQueries {
       val quar = quarStore.read(s).select("doc_id")
       val tfServe = tfStore.read(s).filter(col("doc_id") >= wFinal)
         .join(quar, Seq("doc_id"), "left_anti")
-      serveHybridViews(s, "s53",
-          tfServe,
-          tfServe.groupBy("token").agg(count(lit(1)).as("df")),
-          tfServe.groupBy("doc_id").agg(max("dl").as("dl"))
-            .agg(count(lit(1)).as("n_docs"),
-              coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl")),
+      serveHybridViews(s, "s53", tfServe, dfOf(tfServe), statsOf(tfServe),
           ivfStore.read(s).filter(col("vec_id") >= wFinal)
             .join(quar.select(col("doc_id").as("vec_id")),
               Seq("vec_id"), "left_anti"),
-          qDocs.select(col("doc_id"), col("text"))
-            .join(srcE.select(col("vec_id").as("doc_id"), col("embedding")),
-              Seq("doc_id"), "left"),
-          cents, nProbe, listK, k0, k)
+          servingQueries(qDocs, srcE), cents, nProbe, listK, k0, k)
         .orderBy("query_id", "rank")
     } else
       serveHybridViews(s, "s50",
           tfStore.read(s).filter(col("doc_id") >= wFinal),
           dfStore.read(s), statStore.read(s),
           ivfStore.read(s).filter(col("vec_id") >= wFinal),
-          qDocs.select(col("doc_id"), col("text"))
-            .join(srcE.select(col("vec_id").as("doc_id"), col("embedding")),
-              Seq("doc_id"), "left"),
-          cents, nProbe, listK, k0, k)
+          servingQueries(qDocs, srcE), cents, nProbe, listK, k0, k)
         .orderBy("query_id", "rank")
   }
 
@@ -3361,8 +2738,7 @@ object StreamingQueries {
                                           onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.store.DeltaStore
-    val work = workDir.getOrElse(tempDir("graft_s51_"))
-    val inDir = s"$work/in"; val ck = s"$work/ck"
+    val r = Replay("graft_s51_", workDir)
 
     val ev = events.select(col("event_type"),
       (expr("unix_millis(ts) DIV 60000") * 60000L).as("minute_ms"))
@@ -3373,7 +2749,7 @@ object StreamingQueries {
 
     def tiny(d: DataFrame, p: String): Unit =
       d.coalesce(1).write.mode("overwrite").parquet(p)
-    val minuteStore = new DeltaStore(s"$work/store/minute",
+    val minuteStore = new DeltaStore(s"${r.dir}/store/minute",
       StructType(Seq(StructField("event_type", StringType),
         StructField("minute_ms", LongType), StructField("cnt", LongType))),
       (d, p) => d.repartition(4, col("event_type"))
@@ -3382,7 +2758,7 @@ object StreamingQueries {
       tiny,
       _.groupBy("event_type", "minute_ms")
         .agg(sum("cnt").cast("long").as("cnt")))
-    val typeStore = new DeltaStore(s"$work/store/type",
+    val typeStore = new DeltaStore(s"${r.dir}/store/type",
       StructType(Seq(StructField("event_type", StringType),
         StructField("n_events", LongType))),
       tiny, tiny,
@@ -3398,32 +2774,19 @@ object StreamingQueries {
           .agg(sum("cnt").cast("long").as("n_events")))
     }
 
-    if (!hasParquet(inDir))
-      ev.repartition(3).write.mode("overwrite").parquet(inDir)
+    r.stage(ev.repartition(3))
 
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("minute_ms", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        // batch-grain appends; nothing is filtered at ingest — rows
-        // expire when a merge crosses the watermark (the ClickHouse
-        // TTL-at-merge posture, B3)
-        minuteStore.append(s, id,
-          b.groupBy("event_type", "minute_ms").agg(count(lit(1)).as("cnt")))
-        typeStore.append(s, id,
-          b.groupBy("event_type").agg(count(lit(1)).as("n_events")))
-        if ((id + 1) % compactEvery == 0) retentionPass(wMid, force = false)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    r.foreachBatch(s) { (b, id) =>
+      onBatch(id)
+      // batch-grain appends; nothing is filtered at ingest — rows
+      // expire when a merge crosses the watermark (the ClickHouse
+      // TTL-at-merge posture, B3)
+      minuteStore.append(s, id,
+        b.groupBy("event_type", "minute_ms").agg(count(lit(1)).as("cnt")))
+      typeStore.append(s, id,
+        b.groupBy("event_type").agg(count(lit(1)).as("n_events")))
+      if ((id + 1) % compactEvery == 0) retentionPass(wMid, force = false)
+    }
 
     // the final TTL merge advances the watermark (wMid → wFinal):
     // minutes an earlier merge retained genuinely expire here
@@ -3484,34 +2847,13 @@ object StreamingQueries {
                                          onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.operators.Curation
-    val work = workDir.getOrElse(tempDir("graft_s35_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
+    val r = Replay("graft_s35_", workDir)
 
-    def tokCounts(df: DataFrame): DataFrame = df.select(
-        explode(regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0)))
-          .as("token"))
+    def tokCounts(df: DataFrame): DataFrame = df.select(explode(toksCol).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
 
-    if (!hasParquet(inDir))
-      neu.select(col("doc_id"), col("text")).repartition(3).write.parquet(inDir)
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        tokCounts(b).write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val newCounts = readBatchesOr(s, outDir, tokCounts(neu))
+    r.stage(neu.select(col("doc_id"), col("text")).repartition(3))
+    val newCounts = r.mapBatches(s, onBatch = onBatch)(tokCounts)
       .groupBy("token").agg(sum(col("cnt")).as("cn"))
     val oldCounts = tokCounts(old)
       .select(col("token"), col("cnt").as("co"))
@@ -3550,38 +2892,16 @@ object StreamingQueries {
                                          onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.operators.Curation
-    val work = workDir.getOrElse(tempDir("graft_s31_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
+    val r = Replay("graft_s31_", workDir)
 
     val (tc, tot) = Curation.dsirModel(allDocs)
     val tcP = tc.localCheckpoint()   // vocabulary-sized; feeds every batch
     val totP = tot.localCheckpoint() // 1 row
 
-    if (!hasParquet(inDir))
-      allDocs.filter(col("doc_id") % Curation.BenchMod =!= 0)
-        .select(col("doc_id"), col("text"))
-        .repartition(3).write.parquet(inDir)
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    def admit(b: DataFrame): DataFrame =
-      Curation.dsirScore(b, tcP, totP).filter(col("log_w") >= tau)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        admit(b).write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    readBatchesOr(s, outDir, admit(allDocs.select(col("doc_id"), col("text"))))
+    r.stage(allDocs.filter(col("doc_id") % Curation.BenchMod =!= 0)
+      .select(col("doc_id"), col("text")).repartition(3))
+    r.mapBatches(s, onBatch = onBatch)(
+        Curation.dsirScore(_, tcP, totP).filter(col("log_w") >= tau))
       .select(col("doc_id"), col("n_tokens"), col("log_w"))
       .orderBy("doc_id")
   }
@@ -3610,33 +2930,9 @@ object StreamingQueries {
                                            onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.operators.Curation
-    val work = workDir.getOrElse(tempDir("graft_s42_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
-    if (!hasParquet(inDir))
-      allDocs.select(col("doc_id"), col("lang"), col("text"))
-        .repartition(3).write.parquet(inDir)
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("lang", StringType), StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    def admit(b: DataFrame): DataFrame = Curation.paretoClassifierSample(b)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        admit(b).write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    readBatchesOr(s, outDir,
-      admit(allDocs.select(col("doc_id"), col("lang"), col("text"))))
+    val r = Replay("graft_s42_", workDir)
+    r.stage(allDocs.select(col("doc_id"), col("lang"), col("text")).repartition(3))
+    r.mapBatches(s, onBatch = onBatch)(Curation.paretoClassifierSample)
       .select(col("doc_id"), col("lang"), col("q_score"), col("accept_key"))
       .orderBy("doc_id")
   }
@@ -3672,35 +2968,14 @@ object StreamingQueries {
                                                 onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.operators.Curation
-    val work = workDir.getOrElse(tempDir("graft_s48_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
+    val r = Replay("graft_s48_", workDir)
 
     // pinned once per stream — the model-grain calibration relation
     // (|strata| rows) every micro-batch broadcasts against
     val rates = Curation.temperatureRates(allDocs).localCheckpoint()
 
-    if (!hasParquet(inDir))
-      allDocs.select(col("doc_id"), col("lang"))
-        .repartition(3).write.parquet(inDir)
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("lang", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        Curation.temperatureKeep(b, rates)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    readBatchesOr(s, outDir, Curation.temperatureKeep(allDocs, rates))
+    r.stage(allDocs.select(col("doc_id"), col("lang")).repartition(3))
+    r.mapBatches(s, onBatch = onBatch)(Curation.temperatureKeep(_, rates))
       .select(col("doc_id"), col("lang"), col("rate"))
       .orderBy("doc_id")
   }
@@ -3732,34 +3007,10 @@ object StreamingQueries {
                                             onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.operators.SimilaritySearch
-    val work = workDir.getOrElse(tempDir("graft_s44_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
-    if (!hasParquet(inDir))
-      embs.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-        .repartition(3).write.mode("overwrite").parquet(inDir)
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        SimilaritySearch.embeddingScatter(b, dim)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    readBatchesOr(s, outDir,
-        s.range(0).select(col("id").cast("int").as("i"),
-          col("id").cast("int").as("j"), col("id").as("s")))
+    val r = Replay("graft_s44_", workDir)
+    r.stage(embs.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+      .repartition(3))
+    r.mapBatches(s, onBatch = onBatch)(SimilaritySearch.embeddingScatter(_, dim))
       .groupBy("i", "j").agg(sum("s").as("s"))
       .orderBy("i", "j")
   }
@@ -3783,18 +3034,8 @@ object StreamingQueries {
   private[graft] def embeddingHealthStream(s: SparkSession,
                                            embs: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions
-    val work = tempDir("graft_s32_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
-    embs.select(col("vec_id"), col("embedding"), col("label"))
-      .repartition(3).write.parquet(inDir)
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("label", IntegerType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
+    val r = Replay("graft_s32_")
+    r.stage(embs.select(col("vec_id"), col("embedding"), col("label")).repartition(3))
 
     def partials(b: DataFrame): DataFrame =
       b.withColumn("__dim", size(col("embedding")))
@@ -3807,16 +3048,7 @@ object StreamingQueries {
              sum(col("__norm")).as("sum_norm"),
              min(col("__norm")).as("min_norm"), max(col("__norm")).as("max_norm"))
 
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        partials(b).write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    readBatchesOr(s, outDir, partials(embs))
+    r.mapBatches(s)(partials)
       .groupBy(col("label"))
       .agg(sum(col("n_vecs")).as("n_vecs"),
            min(col("dim_min")).as("dim_min"), max(col("dim_max")).as("dim_max"),
@@ -3849,37 +3081,16 @@ object StreamingQueries {
                                          onBatch: Long => Unit = _ => ())
       : DataFrame = {
     import graft.operators.Dedup
-    val work = workDir.getOrElse(tempDir("graft_s33_"))
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
+    val r = Replay("graft_s33_", workDir)
 
     val refGrams = reference
       .select(explode(graft.functions.TextKernels.word_gram_seq(col("text"), n)).as("sh"))
       .distinct()
       .localCheckpoint() // feeds every micro-batch; pin once
 
-    if (!hasParquet(inDir))
-      incoming.select(col("doc_id"), col("text")).repartition(3).write.parquet(inDir)
-
-    val stream = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val q = stream.writeStream
-      .option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        onBatch(id)
-        Dedup.maxSharedSpanAgainst(b, refGrams, "doc_id", "text", n)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    readBatchesOr(s, outDir,
-        Dedup.maxSharedSpanAgainst(incoming.select(col("doc_id"), col("text")),
-          refGrams, "doc_id", "text", n))
+    r.stage(incoming.select(col("doc_id"), col("text")).repartition(3))
+    r.mapBatches(s, onBatch = onBatch)(
+        Dedup.maxSharedSpanAgainst(_, refGrams, "doc_id", "text", n))
       .select(col("doc_id"), col("max_shared_tokens"),
               col("n_shared_grams"), col("n_spans"))
       .orderBy("doc_id")
@@ -3952,24 +3163,12 @@ object StreamingQueries {
   // ---------------------------------------------------------------------
   def streamCusum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val work = tempDir("graft_s29_")
-    val inDir = s"$work/in"; val outDir = s"$work/out"; val ck = s"$work/ck"
-
-    graft.queries.ExtendedQueries.cusumZ(s, dir)
+    val r = Replay("graft_s29_")
+    r.stage(graft.queries.ExtendedQueries.cusumZ(s, dir)
       .select(unix_millis(col("minute")).as("minute_ms"), col("page"), col("z"))
-      .coalesce(1) // one file = one micro-batch: full history per key, in order
-      .write.parquet(inDir)
-
-    val schema = StructType(Seq(
-      StructField("minute_ms", LongType),
-      StructField("page", StringType),
-      StructField("z", DoubleType)))
-    val stream = s.readStream.schema(schema).parquet(inDir)
-      .as[DriftDetector.ZRow]
-    withStatePartitions(s, 8) {
-      ClickPipeline.runAppendParquet(DriftDetector.detect(stream).toDF(), outDir, ck)
-    }
-    s.read.parquet(outDir)
+      .coalesce(1)) // one file = one micro-batch: full history per key, in order
+    r.append(s)(src => DriftDetector.detect(src.as[DriftDetector.ZRow]).toDF())
+    r.output(s)
       .select(col("page"), col("minute_ms"),
               round(col("s_plus"), 6).as("s_plus"))
       .withColumn("is_drift", col("s_plus") > DriftDetector.H)

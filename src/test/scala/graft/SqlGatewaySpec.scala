@@ -316,6 +316,52 @@ class SqlGatewaySpec extends AnyFunSuite {
     }
   }
 
+  test("POST /entries/<name>: a result cut at the limit is flagged; a full one is not") {
+    withServer() { port =>
+      def post(path: String): (Int, Int, Option[String]) = {
+        val conn = new URI(s"http://127.0.0.1:$port$path").toURL
+          .openConnection().asInstanceOf[HttpURLConnection]
+        conn.setRequestMethod("POST")
+        conn.setDoOutput(true)
+        conn.getOutputStream.close()
+        val status = conn.getResponseCode
+        val rows = new String(conn.getInputStream.readAllBytes(), UTF_8)
+          .trim.split("\n").count(_.nonEmpty)
+        val flag = Option(conn.getHeaderField("X-Graft-Truncated"))
+        conn.disconnect()
+        (status, rows, flag)
+      }
+      // q07 answers 5 rows: below the limit, at it, and at the Int
+      // ceiling (where limit + 1 would overflow) nothing is cut
+      assert(post("/entries/q07_top_pages") == ((200, 5, None)))
+      assert(post("/entries/q07_top_pages?limit=5") == ((200, 5, None)))
+      assert(post(s"/entries/q07_top_pages?limit=${Int.MaxValue}") == ((200, 5, None)))
+      // cut: the first `limit` rows, body format unchanged, and the flag
+      assert(post("/entries/q07_top_pages?limit=2") == ((200, 2, Some("limit=2"))))
+    }
+  }
+
+  test("Gateway.stop() ends the request pool's threads") {
+    def poolThreads(): Set[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName.matches("gateway-\\d+-request-\\d+")).toSet
+    }
+    val before = poolThreads()
+    val gw = SqlGateway.serve(spark, 0)
+    val mine = try {
+      val (hs, _) = http(gw.port, "/health", "GET", None)
+      assert(hs == 200)
+      poolThreads() -- before
+    } finally gw.stop()
+    assert(mine.nonEmpty, "the request ran on no recognisable pool thread")
+    // a worker may still be unwinding when the pool reports terminated;
+    // a pool that was never shut down would idle here past the wait
+    mine.foreach(_.join(10000))
+    assert(mine.forall(!_.isAlive),
+      s"request threads outlived stop(): ${mine.filter(_.isAlive).map(_.getName)}")
+  }
+
   test("/search overrides: caller-named index tables serve identically; a foreign-quantizer ivf table is a loud 400") {
     import org.apache.spark.sql.functions.col
     import graft.operators.SimilaritySearch.{IvfPqFixed => P}

@@ -357,26 +357,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(pruned.nonEmpty, "fixture admitted nothing — vacuous equality")
   }
 
-  test("s36 partitioned (DPP) store layout is row-identical to the bucketed default") {
-    // the r15 scan-bytes escape route: blk partitioned by the 2-char
-    // shingle prefix, batch side broadcast, DPP prunes partitions —
-    // different physical story, ONE semantics
-    val srcNum = expr("CAST(substring(source, 4) AS INT)")
-    val docs = graft.Tables.documents(spark, TestSpark.Sf0001)
-    val inc = docs.filter(srcNum < 10)
-    val ref = docs.filter(srcNum >= 10)
-    def run(): Seq[(Long, Long, Double)] = graft.streaming.StreamingQueries
-      .nearDupStreamBucketed(spark, inc, ref, refCap = 4, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq
-    val bucketed = run()
-    spark.conf.set("spark.graft.s36.layout", "partitioned")
-    val partitioned = try run()
-    finally spark.conf.unset("spark.graft.s36.layout")
-    assert(partitioned == bucketed,
-      s"layouts disagree:\n$partitioned\n$bucketed")
-    assert(bucketed.nonEmpty, "fixture admitted nothing — vacuous equality")
-  }
-
   test("s36 totality: empty reference / empty incoming yield empty admissions, tables still cleaned") {
     val docs = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
     val none = docs.limit(0)
@@ -1153,6 +1133,74 @@ class StreamingSpec extends AnyFunSuite {
       graft.queries.CurationQueries.DsirTau)
     assert(admitted.isEmpty && admitted.columns.toSeq ==
       Seq("doc_id", "n_tokens", "log_w"))
+
+    // the harness-derived read-backs: each empty input yields an empty
+    // result typed exactly like the entry's non-empty answer
+    def typedEmpty(empty: org.apache.spark.sql.DataFrame,
+                   full: org.apache.spark.sql.DataFrame): Unit = {
+      assert(empty.isEmpty, empty.collect().mkString(","))
+      assert(empty.schema.map(f => (f.name, f.dataType)) ==
+        full.schema.map(f => (f.name, f.dataType)),
+        s"${empty.schema.simpleString} vs ${full.schema.simpleString}")
+    }
+    val emb = (0L until 16L).map { i =>
+      (i, Array.tabulate(4)(d => (((i * 7 + d * 3) % 11) - 5).toFloat))
+    }.toDF("vec_id", "embedding")
+    val noEmb = emb.limit(0)
+    // s37 / s45: no queries against a built index
+    typedEmpty(
+      StreamingQueries.annServeStream(spark, emb, noEmb, k = 3, nLists = 8, nProbe = 2),
+      StreamingQueries.annServeStream(spark, emb, emb.filter(col("vec_id") < 5),
+        k = 3, nLists = 8, nProbe = 2))
+    def pq(queries: org.apache.spark.sql.DataFrame) =
+      StreamingQueries.pqServeStream(spark, emb, queries, k = 3, nLists = 8,
+        nProbe = 2, m = 2, codes = 16, refine = 2)
+    typedEmpty(pq(noEmb), pq(emb.filter(col("vec_id") < 5)))
+    // s44: no embeddings streamed — the scatter relation's count cell
+    // still reads 0, exactly as the batch x128 relation does
+    val scatter = StreamingQueries.embeddingScatterStream(spark, noEmb, dim = 4)
+    assert(scatter.schema == StreamingQueries.embeddingScatterStream(spark, emb,
+      dim = 4).schema)
+    assert(scatter.collect().toSeq == graft.operators.SimilaritySearch
+      .embeddingScatter(noEmb, 4).orderBy("i", "j").collect().toSeq)
+    // s42: no documents to admit. s48 calibrates its rates on the
+    // streamed corpus itself, so an empty corpus has no rates: a loud
+    // precondition failure, never an untyped read-back
+    val langDocs = (0L until 12L)
+      .map(i => (i, if (i % 3 == 0) "de" else "en", s"alpha w$i beta text $i"))
+      .toDF("doc_id", "lang", "text")
+    typedEmpty(StreamingQueries.paretoAdmissionStream(spark, langDocs.limit(0)),
+      StreamingQueries.paretoAdmissionStream(spark, langDocs))
+    val noRates = intercept[IllegalArgumentException](
+      StreamingQueries.temperatureAdmissionStream(spark, langDocs.limit(0)))
+    assert(noRates.getMessage.contains("empty corpus"))
+    // the harness fallback itself: Spark stages even an empty relation
+    // as one empty file (one zero-row batch), so take the file away — no
+    // batch fires, and the read-back is the per-batch function applied
+    // to an empty batch
+    val r = Replay("graft_no_batches_")
+    r.stage(docs)
+    org.apache.commons.io.FileUtils.cleanDirectory(new java.io.File(r.in))
+    val none = r.mapBatches(spark)(_.select(col("doc_id"), length(col("text")).as("n")))
+    assert(none.isEmpty && none.schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq(("doc_id", "bigint"), ("n", "int"), ("batch", "int")))
+    // s35: an empty new snapshot still yields the one typed gauge row,
+    // with nothing counted on the new side
+    val drift = StreamingQueries.snapshotDriftStream(spark, docs, noDocs)
+    val driftFull = StreamingQueries.snapshotDriftStream(spark, docs, docs)
+    assert(drift.schema == driftFull.schema)
+    assert(drift.collect().toSeq.map(_.getLong(2)) == Seq(0L))
+  }
+
+  test("inParallel: every failing lane surfaces — later failures ride along as suppressed") {
+    val e = intercept[IllegalStateException] {
+      StreamingQueries.inParallel(
+        () => throw new IllegalStateException("lane 0"),
+        () => (),
+        () => throw new IllegalArgumentException("lane 2"))
+    }
+    assert(e.getMessage == "lane 0")
+    assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("lane 2"))
   }
 
   test("s32 streamed embedding health == batch x91 (algebraic partials merge exactly)") {
