@@ -5,10 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.functions.WallClock.wall_clock
+import graft.functions.WireJson.wire_json
+
 /** The reference's streaming dataflow (SURVEY.md §2.A; StreamJob.java:193-332)
   * as one Structured Streaming pipeline:
   *
-  *   source (Kafka | JSON file-stream) → PERMISSIVE parse + sentinel filter
+  *   source (Kafka | JSON file-stream) → PERMISSIVE parse (native
+  *   strict-subset decoder, `from_json` for the rest) + sentinel filter
   *   → event-time + 10 s watermark → 1-minute tumbling window aggregation
   *   → parquet-append sinks stamping ingest time, with checkpointing.
   *
@@ -44,9 +48,19 @@ object ClickPipeline {
   /** A3: PERMISSIVE JSON deserialize only (malformed → null fields, the
     * from_json analogue of the reference's sentinel record,
     * StreamJob.java:228-249). Kept separate from [[parseErrorFilter]]
-    * so observability hooks (m02) can count errors between the two. */
+    * so observability hooks (m02) can count errors between the two.
+    *
+    * Two tiers, one answer: the native decoder
+    * ([[graft.functions.WireJson]]) reads every line in its strict JSON
+    * subset — every line [[graft.gen.EventGenerator]] writes — straight
+    * from the line's bytes, and answers null for any
+    * other line, which then goes to `from_json`. The decoder's subset is
+    * where the two provably agree, so the result is `from_json`'s row
+    * for row (a null line stays null); Jackson runs only on lines
+    * outside it. */
   def deserialize(raw: DataFrame): DataFrame =
-    raw.select(from_json(col("value"), clickSchema).as("c"))
+    raw.select(coalesce(wire_json(col("value"), clickSchema),
+        from_json(col("value"), clickSchema)).as("c"))
       .select(col("c.*"))
 
   /** A4: drop undeserializable + sentinel rows; epoch-ms → TimestampType. */
@@ -124,7 +138,10 @@ object ClickPipeline {
       .agg(sum(col("cnt")).as("cnt"), count("*").as("unique_users"))
 
   /** A12/A13 + B8 + A14: parquet-append sink stamping ingest-time
-    * `created_at` (clickhouse_tables.sql:14), checkpointed, running until
+    * `created_at` (clickhouse_tables.sql:14) as each row is written —
+    * per row in the write task, not `current_timestamp()`, which the
+    * trigger fixes at its start and so would leave the batch's own
+    * execution out of `created_at − ts` — checkpointed, running until
     * all currently-available input is processed (Trigger.AvailableNow —
     * the bounded-replay analogue of the reference's continuous run).
     * Append output mode ⇒ each window is emitted exactly once, when the
@@ -136,13 +153,12 @@ object ClickPipeline {
     * duplicate — the standard idempotent-foreachBatch pattern. Readers
     * see `batch` as a partition column and ignore it. */
   private def appendParquetWriter(df: DataFrame, outDir: String, checkpointDir: String) =
-    df
-      .withColumn("created_at", current_timestamp())
-      .writeStream
+    df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        batch.withColumn("created_at", wall_clock())
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
 
   def runAppendParquet(df: DataFrame, outDir: String, checkpointDir: String): Unit = {
@@ -193,7 +209,9 @@ object ClickPipeline {
   def jdbcBatchWriter(url: String, table: String, props: java.util.Properties,
                       batchSize: Int = 1000, maxRetries: Int = 3)
                      : (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
-    val stamped = batch.withColumn("created_at", current_timestamp())
+    // stamped per row as the JDBC write task sends it (see
+    // appendParquetWriter); a retry re-stamps
+    val stamped = batch.withColumn("created_at", wall_clock())
     var attempt = 0
     var done = false
     var lastFailure: Exception = null

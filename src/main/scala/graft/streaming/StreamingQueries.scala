@@ -78,6 +78,15 @@ object StreamingQueries {
       } finally pool.shutdown()
     }
 
+  /** Release a `localCheckpoint` pin. `Dataset.unpersist` does not free
+    * it: the blocks belong to the checkpointed RDD the pinned plan wraps,
+    * so that RDD is unpersisted itself. */
+  private[graft] def unpin(pinned: DataFrame): Unit =
+    pinned.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case p => throw new IllegalArgumentException(s"not a localCheckpoint: $p")
+    }
+
   /** The `[a-z0-9]+` tokenizer of the text-serving entries (s20, s35,
     * the BM25 index and its serve, the serving-index deltas). */
   private def toksCol: org.apache.spark.sql.Column =
@@ -1130,6 +1139,8 @@ object StreamingQueries {
     // tokenize+shingle scan (plans are trees). The two writes hit
     // disjoint roots and the input staging reads only `incoming`, so
     // all three run concurrently (§2.6).
+    // The pin is released once the three lanes have settled: the
+    // stream reads only the two store tables.
     val refShingles = reference
       .select(col("doc_id").as("id_ref"), shArr(col("text")).as("ref_sh"))
       .localCheckpoint()
@@ -1138,28 +1149,34 @@ object StreamingQueries {
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("sh"))))
       .filter(col("__df") <= refCap)
       .select(col("sh"), col("id_ref"))
-    inParallel(
+    try inParallel(
       () => writeBucketedBy(refShingles, s"${r.dir}/wh/ref", refTbl, "id_ref"),
       () => writeBucketedBy(blkRows, s"${r.dir}/wh/blk", blkTbl, "sh"),
       () => r.stage(incoming.select(col("doc_id"), col("text")).repartition(3)))
+    finally unpin(refShingles)
 
     // the store-size gate for the per-batch scan prune: one blk count
     // per STREAM (not per batch), decided before the first trigger
     val prune = s.table(blkTbl).count() >= pruneFloor
 
-    r.mapBatches(s, onBatch = onBatch) { b =>
-      // one file per micro-batch = ONE input partition: fan the
-      // row-local shingle kernel out before it runs (s25's floor).
+    // one file per micro-batch = ONE input partition: fan the row-local
+    // shingle kernel out before it runs (s25's floor)
+    def shingled(b: DataFrame) = b.repartition(nPart)
+      .select(col("doc_id").as("id_in"), shArr(col("text")).as("in_sh"))
+    r.foreachBatch(s) { (b, id) =>
+      onBatch(id)
       // When pruning, the shingled batch feeds TWO consumers (the
       // semi-join build side and the main join side) — pin it so the
       // repartition + kernel run once per batch, not twice (unpinned,
       // the doubled build subplan measured a 1.8× wall regression at
-      // 30× that the pin fully recovers)
-      val shingled0 = b.repartition(nPart)
-        .select(col("doc_id").as("id_in"), shArr(col("text")).as("in_sh"))
-      val shingled = if (prune) shingled0.localCheckpoint() else shingled0
-      bucketedNearDupDelta(s, shingled, blkTbl, refTbl, threshold, prune)
+      // 30× that the pin fully recovers); released once the batch's
+      // delta is written
+      val sh = if (prune) shingled(b).localCheckpoint() else shingled(b)
+      try r.emit(bucketedNearDupDelta(s, sh, blkTbl, refTbl, threshold, prune), id)
+      finally if (prune) unpin(sh)
     }
+    r.readBack(s)(b => bucketedNearDupDelta(s, shingled(b), blkTbl, refTbl,
+      threshold, prune))
       // the delta rows are already (id_in, id_ref, jaccard); a candidate
       // matched via k shared shingles emitted k identical rows —
       // collapse them, as s25 does
@@ -1448,19 +1465,18 @@ object StreamingQueries {
 
     val src = items.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding").as("vec"))
+    // the retention horizon is checked first — an empty corpus is named
+    // as such, not as missing quantizer rows — and BEFORE the input is
+    // staged (as s50's horizonThenStage): staging beside a failing check
+    // would commit input that a resume then never re-stages
+    val wFinal = if (!retention) Long.MinValue else {
+      val top = src.agg(max(col("vec_id"))).collect()(0)
+      require(!top.isNullAt(0), "s49: empty corpus — no retention horizon")
+      top.getLong(0) / 4
+    }
     val (fixedRows, dsub) = SimilaritySearch.pqFixedRows(src, nLists, m, codes)
     val codeStore = pqCodeStore(s, s"${r.dir}/store/codes", m)
-    // the retention-horizon scan and the corpus-sized input staging are
-    // independent reads of `src` → concurrent (§2.6)
-    @volatile var wFinal = Long.MinValue
-    inParallel(
-      () => if (retention) {
-        val r = src.agg(max(col("vec_id"))).collect()(0)
-        require(!r.isNullAt(0), "s49: empty corpus — no retention horizon")
-        wFinal = r.getLong(0) / 4
-      },
-      () => r.stage(src.select(col("vec_id"), col("vec").as("embedding"))
-        .repartition(3)))
+    r.stage(src.select(col("vec_id"), col("vec").as("embedding")).repartition(3))
     val wMid = wFinal / 2
 
     r.foreachBatch(s) { (b, id) =>

@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -40,6 +42,188 @@ class StreamingSpec extends AnyFunSuite {
       jsonClick("e2", "u2", t0 + 1000, "/cart")).toDF("value")
     val parsed = ClickPipeline.parse(raw).collect()
     assert(parsed.map(_.getAs[String]("event_id")).sorted.toSeq == Seq("e1", "e2"))
+  }
+
+  // ---- the wire decoder's differential spec: seeded lines in classes,
+  // each class with the decoder's required answer (Some(true): decoded,
+  // Some(false): refused to from_json); every line, whichever tier
+  // reads it, must deserialize exactly as plain from_json does
+
+  private def q(v: String) = "\"" + v + "\""
+  private val safeStr: Gen[String] = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n,
+    Gen.oneOf((0x20 to 0x7e).map(_.toChar).filterNot(c => c == '"' || c == '\\'))))
+    .map(_.mkString)
+  // at most 18 digits, either sign — the decoder's integer range
+  private val tsLit: Gen[String] =
+    Gen.chooseNum(-999999999999999999L, 999999999999999999L).map(_.toString)
+  private val fields: Gen[Seq[(String, String)]] = for {
+    strs <- Gen.listOfN(6, safeStr); ts <- tsLit
+  } yield Seq("event_id" -> q(strs(0)), "user_id" -> q(strs(1)), "ts" -> ts,
+    "page" -> q(strs(2)), "referrer" -> q(strs(3)), "country" -> q(strs(4)),
+    "device" -> q(strs(5)))
+  private val ws: Gen[String] = Gen.oneOf("", " ", "  ", "\t", "\n", "\r", "\r\n", " \t\n")
+
+  private def compact(pairs: Seq[(String, String)]): String =
+    pairs.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+  private def padded(pairs: Seq[(String, String)]): Gen[String] =
+    Gen.listOfN(4 * pairs.size + 3, ws).map { w =>
+      val g = w.iterator
+      g.next() + "{" + g.next() + pairs.map { case (k, v) =>
+        s"${q(k)}${g.next()}:${g.next()}$v${g.next()}" }.mkString("," + g.next()) +
+        "}" + g.next()
+    }
+  /** `fields` with field `i % 7`'s value replaced by `v`. */
+  private def withValue(i: Int, v: String): Gen[String] =
+    fields.map(f => compact(f.updated(i % 7, f(i % 7)._1 -> v)))
+  /** `fields` with `kv` inserted at position `i % 8`. */
+  private def withExtra(i: Int, kv: (String, String)): Gen[String] =
+    fields.map(f => compact(f.patch(i % 8, Seq(kv), 0)))
+  private val pos = Gen.choose(0, 63)
+
+  private val lineClasses: Seq[(String, Option[Boolean], Gen[String])] = Seq(
+    ("compact", Some(true), fields.map(compact)),
+    ("whitespace", Some(true), fields.flatMap(padded)),
+    ("reordered", Some(true), for { f <- fields; k <- Gen.choose(0L, Long.MaxValue) }
+      yield compact(new scala.util.Random(k).shuffle(f))),
+    ("missing", Some(true), fields.flatMap(f => Gen.someOf(f)).map(f => compact(f.toSeq))),
+    ("empty object", Some(true), ws.flatMap(a => ws.map(b => s"$a{$b}$a"))),
+    ("nulls", Some(true), for { f <- fields; m <- Gen.listOfN(7, Gen.oneOf(true, false)) }
+      yield compact(f.zip(m).map { case ((k, v), n) => k -> (if (n) "null" else v) })),
+    ("unknown scalar", Some(true), for {
+      i <- pos; k <- Gen.oneOf("extra", "", "Event_ID", "TS", "ts ", "page2", "c")
+      v <- Gen.oneOf(safeStr.map(q), tsLit, Gen.const("null"))
+      l <- withExtra(i, k -> v)
+    } yield l),
+    ("unknown nested", Some(false), for {
+      i <- pos; v <- Gen.oneOf("{}", "{\"a\":1}", "[]", "[1,\"x\"]", "true", "false")
+      l <- withExtra(i, "extra" -> v)
+    } yield l),
+    ("duplicate key", Some(false), for {
+      f <- fields; i <- pos; v <- Gen.oneOf(q("dup"), "null", "7")
+    } yield compact(f :+ (f(i % 7)._1 -> (if (f(i % 7)._1 == "ts" && v == q("dup")) "8" else v)))),
+    ("escapes", Some(false), for {
+      i <- pos; e <- Gen.oneOf("\\\"", "\\\\", "\\n", "\\u00e9", "\\/", "\\t")
+      l <- withValue(Seq(0, 1, 3, 4, 5, 6)(i % 6), q(s"a${e}b"))
+    } yield l),
+    ("non-ascii", Some(false), for {
+      i <- pos; c <- Gen.oneOf("é", "日本", "\u00a0", "\u007f", "\uD83D\uDE00")
+      l <- Gen.oneOf(withValue(Seq(0, 1, 3, 4, 5, 6)(i % 6), q(s"x${c}y")),
+        withExtra(i, s"k$c" -> q("v")))
+    } yield l),
+    ("control char", Some(false), for {
+      i <- pos; c <- Gen.oneOf("\u0001", "\t", "\u001f", "\u0000")
+      l <- withValue(Seq(0, 1, 3, 4, 5, 6)(i % 6), q(s"x${c}y"))
+    } yield l),
+    ("single quotes", Some(false), for { f <- fields; i <- pos } yield
+      compact(f.updated(i % 7, f(i % 7)._1 -> (if (i % 7 == 2) f(2)._2 else "'v'")))
+        .replace(s"\"${f(i % 7)._1}\":", s"'${f(i % 7)._1}':")),
+    ("zero", Some(true), Gen.oneOf("0", "-0").flatMap(v => withValue(2, v))),
+    ("numbers", Some(false), Gen.oneOf("01", "-01", "00", "1.5", "-0.0", "1e3", "1E+2",
+      "2.0e-1", "-", "+1", ".5", "1234567890123456789", "-1234567890123456789",
+      Long.MaxValue.toString, Long.MinValue.toString, "99999999999999999999999",
+      "NaN", "Infinity", "0x1f").flatMap(v => withValue(2, v))),
+    ("type mismatch", Some(false), for {
+      i <- pos
+      l <- Gen.oneOf(withValue(2, q("123")), withValue(2, "true"),
+        withValue(2, "{\"v\":1}"), withValue(Seq(0, 1, 3, 4, 5, 6)(i % 6), "42"),
+        withValue(3, "[\"/\"]"), withValue(5, "false"))
+    } yield l),
+    ("truncated", Some(false), for {
+      f <- fields; k <- Gen.choose(0, 1000)
+    } yield { val l = compact(f); l.take(k % l.length) }),
+    ("trailing garbage", Some(false), for {
+      f <- fields; g <- Gen.oneOf("x", "}", ",", " {}", "\u0000", "//c", " null")
+    } yield compact(f) + g),
+    ("not an object", Some(false), Gen.oneOf("", " ", "\t", "\r\n", "[]", "[{}]",
+      "\"s\"", "1", "null", "true", "nul", "{", "}", "{,}", "{\"a\"}", "{\"a\":}",
+      "{\"a\" 1}", "{\"ts\":1,}", "{ts:1}")))
+
+  test("parse: the native wire decoder agrees with from_json row for row on 10,000 seeded lines") {
+    import graft.functions.WireJson.wire_json
+    val gen = Gen.oneOf(lineClasses).flatMap { case (cls, want, g) =>
+      g.map(l => (cls, want, l)) }
+    val generated = (0 until 8000).map(i =>
+      gen.apply(Gen.Parameters.default, Seed(1000L + i)).get)
+    // the canonical wire lines: the generator's own, as the benchmark and
+    // the Kafka producer write them
+    val canonical = graft.gen.EventGenerator.events(spark, 2000, seed = 11L)
+      .toJSON.collect().map(l => ("canonical", Option(true), l))
+    val cases = canonical.toSeq ++ generated :+ (("sql null", Option(false), null))
+    assert(cases.size >= 10001)
+    lineClasses.foreach { case (cls, _, _) =>
+      assert(generated.count(_._1 == cls) >= 100, s"class $cls under-sampled") }
+
+    // three readers of the same lines: a local relation (interpreted
+    // eval), parquet (codegen over column vectors) and a text file
+    // (codegen over the reader's reused line buffer — raw CR/LF lines
+    // cannot be one text line, so that source skips them)
+    val lines = cases.map(_._3)
+    val dir = Files.createTempDirectory("wire_json").toString
+    // a parquet scan reorders files, so that copy carries the line number
+    lines.zipWithIndex.toDF("value", "i").write.parquet(s"$dir/pq")
+    def pq = spark.read.parquet(s"$dir/pq").orderBy("i")
+    val textLines = lines.filter(l => l != null && !l.exists(c => c == '\n' || c == '\r'))
+    textLines.toDF("value").coalesce(1).write.text(s"$dir/txt")
+    def expected(raw: org.apache.spark.sql.DataFrame) =
+      raw.select(from_json(col("value"), ClickPipeline.clickSchema).as("c"))
+        .select(col("c.*")).collect().toSeq
+    def check(name: String, raw: org.apache.spark.sql.DataFrame, n: Int) = {
+      val got = ClickPipeline.deserialize(raw).collect().toSeq
+      val want = expected(raw)
+      assert(got.size == n && want.size == n, s"$name: ${got.size}/${want.size} rows of $n")
+      got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+        assert(g == w, s"$name line $i: decoded $g, from_json $w") }
+    }
+    check("local", lines.toDF("value"), lines.size)
+    check("parquet", pq, lines.size)
+    check("text", spark.read.text(s"$dir/txt"), textLines.size)
+
+    // the decoder's own answer, class by class: the fast path is taken
+    // on every line it must read, and refused on every line it must not
+    val decoded = pq
+      .select(wire_json(col("value"), ClickPipeline.clickSchema).isNotNull)
+      .collect().map(_.getBoolean(0))
+    cases.zip(decoded).foreach { case ((cls, want, l), got) =>
+      want.foreach(w => assert(got == w,
+        s"class $cls: decoder ${if (got) "read" else "refused"} ${Option(l).map(_.take(120))}"))
+    }
+    assert(ClickPipeline.deserialize(lines.toDF("value"))
+      .filter(col("event_id").isNotNull).count() >= canonical.length)
+  }
+
+  test("created_at is stamped as each row is written: a 300 ms micro-batch shows in it") {
+    // each row takes 300 ms to compute, so the batch takes at least that
+    // long before its first row is written; a trigger-start stamp
+    // (current_timestamp) would read the trigger's start instead
+    val slow = udf { (id: String) => Thread.sleep(300); id }.asNondeterministic()
+    val input = MemoryStream[String](spark)
+    val dir = Files.createTempDirectory("stamp").toString
+    val q = ClickPipeline.startContinuous(ClickPipeline.parse(input.toDF())
+        .withColumn("event_id", slow(col("event_id"))),
+      s"$dir/out", s"$dir/ck", interval = "100 milliseconds")
+    try {
+      input.addData(jsonClick("e1", "u1", t0, "/"), jsonClick("e2", "u2", t0, "/"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val landed = q.recentProgress.filter(_.numInputRows > 0)
+    assert(landed.nonEmpty)
+    landed.foreach { p =>
+      val start = java.time.Instant.parse(p.timestamp).toEpochMilli
+      val stamps = spark.read.parquet(s"$dir/out/batch=${p.batchId}")
+        .select(unix_millis(col("created_at"))).as[Long].collect()
+      assert(stamps.length == p.numInputRows)
+      stamps.foreach(c => assert(c >= start + 300,
+        s"batch ${p.batchId}: created_at ${c - start} ms after its trigger start"))
+    }
+    // the JDBC sink stamps the same way, within its write task
+    val url = "jdbc:derby:memory:graft_stamp;create=true"
+    val before = System.currentTimeMillis()
+    ClickPipeline.jdbcBatchWriter(url, "stamped", new java.util.Properties())(
+      Seq("e1", "e2").toDF("event_id").select(slow(col("event_id")).as("event_id")), 0L)
+    val jdbcStamps = spark.read.jdbc(url, "stamped", new java.util.Properties())
+      .select(unix_millis(col("created_at"))).as[Long].collect()
+    assert(jdbcStamps.length == 2 && jdbcStamps.forall(_ >= before + 300),
+      jdbcStamps.map(_ - before).mkString(","))
   }
 
   test("windowed agg: [start,end) boundaries, late-beyond-watermark rows dropped") {
@@ -373,6 +557,20 @@ class StreamingSpec extends AnyFunSuite {
       .count() == 0)
     assert(spark.catalog.listTables().count() == before,
       "s36 leaked catalog tables on the degenerate inputs")
+  }
+
+  test("s36 releases its pins: no persistent RDD it added survives a run, prune on and off") {
+    val sc = spark.sparkContext
+    val srcNum = expr("CAST(substring(source, 4) AS INT)")
+    val docs = graft.Tables.documents(spark, TestSpark.Sf0001)
+    Seq(0L, Long.MaxValue).foreach { floor =>
+      val before = sc.getPersistentRDDs.keySet
+      graft.streaming.StreamingQueries.nearDupStreamBucketed(spark,
+        docs.filter(srcNum < 10), docs.filter(srcNum >= 10), refCap = 4,
+        threshold = 0.5, pruneFloor = floor).collect()
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"pruneFloor $floor: s36 left RDDs ${left.mkString(",")} pinned")
+    }
   }
 
   test("s26 streamed span clean: byte-identical to the batch operator across micro-batches") {
@@ -1190,6 +1388,19 @@ class StreamingSpec extends AnyFunSuite {
     val driftFull = StreamingQueries.snapshotDriftStream(spark, docs, docs)
     assert(drift.schema == driftFull.schema)
     assert(drift.collect().toSeq.map(_.getLong(2)) == Seq(0L))
+  }
+
+  test("s49 validates before it stages: an empty corpus fails with no input committed") {
+    val w = Files.createTempDirectory("s49_empty").toString
+    val emb = Seq((0L, Array(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding").limit(0)
+    val e = intercept[IllegalArgumentException](
+      StreamingQueries.pqMaintainServe(spark, emb, emb, k = 3, nLists = 8, nProbe = 2,
+        m = 2, codes = 16, refine = 2, retention = true, workDir = Some(w)))
+    assert(e.getMessage.contains("empty corpus"))
+    val in = new java.io.File(s"$w/in")
+    val staged = if (!in.exists) Nil else
+      org.apache.commons.io.FileUtils.listFiles(in, Array("parquet"), true).toArray.toSeq
+    assert(staged.isEmpty, s"s49 staged input before failing: ${staged.mkString(",")}")
   }
 
   test("inParallel: every failing lane surfaces — later failures ride along as suppressed") {
