@@ -6,21 +6,19 @@ Usage: oracle_check.py <sfDir> <verifyOutDir>
 For each query in <verifyOutDir>/oracle_sql.json: run the SQL in DuckDB
 with the sf parquet tables registered as views, load the Spark parquet
 result, canonicalize both (columns sorted by name, rows sorted, doubles
-rounded to 9 significant digits), and diff.
+rounded to 9 significant digits), and diff. When the rounded forms
+differ, the rows are compared one by one with doubles within half a unit
+of the ninth significant digit, as perfbench/checks.py does: rounding
+first reports two doubles one ulp apart as different when they straddle
+a rounding boundary.
 """
 import sys, json, glob, os
 import duckdb
 import pandas as pd
 import numpy as np
 
-sf_dir, out_dir = sys.argv[1], sys.argv[2]
 
-con = duckdb.connect()
-for f in glob.glob(f"{sf_dir}/*.parquet"):
-    name = os.path.basename(f).replace(".parquet", "")
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{f}')")
-
-def canon(df):
+def canon(df, round_doubles=True):
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
         if df[c].dtype == object:
@@ -28,9 +26,8 @@ def canon(df):
         elif np.issubdtype(df[c].dtype, np.floating):
             def r9(x):
                 if pd.isna(x) or x == 0: return x
-                from decimal import Decimal
                 return float(f"{x:.9g}")
-            df[c] = df[c].map(r9)
+            df[c] = df[c].map(r9) if round_doubles else df[c].astype("float64")
         elif np.issubdtype(df[c].dtype, np.datetime64):
             df[c] = df[c].astype("datetime64[ms]").astype("int64")
         elif df[c].dtype == bool or str(df[c].dtype) == "boolean":
@@ -40,39 +37,79 @@ def canon(df):
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
 
-oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-fails = 0
-for name, sql in sorted(oracle.items()):
-    try:
-        duck = con.execute(sql).df()
-    except Exception as e:
-        print(f"FAIL {name}: duckdb error: {e}")
-        fails += 1
-        continue
-    spark_files = glob.glob(f"{out_dir}/{name}/*.parquet")
-    if not spark_files:
-        print(f"FAIL {name}: no spark output")
-        fails += 1
-        continue
-    spark = pd.concat([pd.read_parquet(f) for f in spark_files])
+
+def agree_to_9_digits(a, b):
+    """Row by row, doubles within half a unit of the ninth significant
+    digit and every other value equal; rows are matched after sorting on
+    the other columns first, then on the unrounded doubles."""
+    a, b = canon(a, round_doubles=False), canon(b, round_doubles=False)
+    if list(a.columns) != list(b.columns) or len(a) != len(b):
+        return False
+    doubles = [c for c in a.columns if np.issubdtype(a[c].dtype, np.floating)
+               and np.issubdtype(b[c].dtype, np.floating)]
+    keys = [c for c in a.columns if c not in doubles] + doubles
+    a = a.sort_values(by=keys, kind="mergesort").reset_index(drop=True)
+    b = b.sort_values(by=keys, kind="mergesort").reset_index(drop=True)
+    for c in a.columns:
+        x, y = a[c].to_numpy(), b[c].to_numpy()
+        if c in doubles:
+            with np.errstate(invalid="ignore"):
+                ok = (np.isnan(x) & np.isnan(y)) | (
+                    np.abs(x - y) <= 5e-9 * np.maximum(np.abs(x), np.abs(y)))
+        else:
+            ok = (x == y) | (pd.isna(x) & pd.isna(y))
+        if not ok.all():
+            return False
+    return True
+
+
+def compare(duck, spark):
+    """None when the two results match, else the reason they do not."""
     a, b = canon(duck), canon(spark)
     if list(a.columns) != list(b.columns):
-        print(f"FAIL {name}: columns duck={list(a.columns)} spark={list(b.columns)}")
-        fails += 1
-        continue
+        return f"columns duck={list(a.columns)} spark={list(b.columns)}"
     if len(a) != len(b):
-        print(f"FAIL {name}: rows duck={len(a)} spark={len(b)}")
-        fails += 1
-        continue
-    if not a.equals(b):
-        neq = (a != b) & ~(a.isna() & b.isna())
-        bad_cols = [c for c in a.columns if neq[c].any()]
-        print(f"FAIL {name}: value mismatch in {bad_cols}")
-        for c in bad_cols[:2]:
-            idx = neq[c].idxmax()
-            print(f"   first diff col={c} row={idx}: duck={a[c][idx]!r} spark={b[c][idx]!r}")
-        fails += 1
-        continue
-    print(f"OK   {name} ({len(a)} rows)")
-print(f"\n{len(oracle) - fails}/{len(oracle)} match")
-sys.exit(1 if fails else 0)
+        return f"rows duck={len(a)} spark={len(b)}"
+    if a.equals(b) or agree_to_9_digits(duck, spark):
+        return None
+    neq = (a != b) & ~(a.isna() & b.isna())
+    bad_cols = [c for c in a.columns if neq[c].any()]
+    msg = f"value mismatch in {bad_cols}"
+    for c in bad_cols[:2]:
+        idx = neq[c].idxmax()
+        msg += f"\n   first diff col={c} row={idx}: duck={a[c][idx]!r} spark={b[c][idx]!r}"
+    return msg
+
+
+def main(sf_dir, out_dir):
+    con = duckdb.connect()
+    for f in glob.glob(f"{sf_dir}/*.parquet"):
+        name = os.path.basename(f).replace(".parquet", "")
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{f}')")
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    fails = 0
+    for name, sql in sorted(oracle.items()):
+        try:
+            duck = con.execute(sql).df()
+        except Exception as e:
+            print(f"FAIL {name}: duckdb error: {e}")
+            fails += 1
+            continue
+        spark_files = glob.glob(f"{out_dir}/{name}/*.parquet")
+        if not spark_files:
+            print(f"FAIL {name}: no spark output")
+            fails += 1
+            continue
+        spark = pd.concat([pd.read_parquet(f) for f in spark_files])
+        err = compare(duck, spark)
+        if err:
+            print(f"FAIL {name}: {err}")
+            fails += 1
+            continue
+        print(f"OK   {name} ({len(duck)} rows)")
+    print(f"\n{len(oracle) - fails}/{len(oracle)} match")
+    return 1 if fails else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1], sys.argv[2]))
