@@ -56,8 +56,12 @@ object GraftSession {
   /** Hadoop caches the `file:` filesystem per JVM and user, not per
     * configuration, so a stock `LocalFileSystem` created before the first
     * session would silently win over the binding and bring the forks
-    * back. Resolving it here with the binding seeds the cache with the NIO
-    * class, or fails loudly when another class is already there. */
+    * back: fail loudly when the cache holds another class. Looking the
+    * class up creates the entry when there is none; that probe instance,
+    * initialized from a bare configuration, is closed again (which drops
+    * it from the cache), so the first lookup under Spark's own Hadoop
+    * configuration, `spark.hadoop.*` included, initializes the one the
+    * session uses. */
   private def requireNioFileSystem(): Unit = {
     val conf = new Configuration()
     FileBindings.foreach { case (k, v) => conf.set(k, v) }
@@ -65,6 +69,7 @@ object GraftSession {
     if (!fs.isInstanceOf[NioLocalFileSystem]) throw new IllegalStateException(
       s"the JVM's cached file: filesystem is ${fs.getClass.getName}, created before the " +
         s"first graft session; build the session before any other Hadoop file access")
+    if (fs.getConf eq conf) fs.close()
   }
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors): SparkSession = {

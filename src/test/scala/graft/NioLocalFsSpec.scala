@@ -137,6 +137,25 @@ class NioLocalFsSpec extends AnyFunSuite {
     } finally FileSystem.closeAllForUGI(ugi)
   }
 
+  test("the cache probe leaves the file: filesystem to the session's own configuration") {
+    val ugi = UserGroupInformation.createRemoteUser("nio-local-fs-spec-probe")
+    try {
+      val bytesPerSum = ugi.doAs(new PrivilegedExceptionAction[Int] {
+        def run(): Int = {
+          GraftSession.configure(SparkSession.builder(), "1")
+          val conf = new Configuration()
+          conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+          conf.setInt("file.bytes-per-checksum", 1024)
+          FileSystem.get(URI.create("file:///"), conf) match {
+            case fs: NioLocalFileSystem => fs.getBytesPerSum
+            case fs => fail(fs.getClass.getName)
+          }
+        }
+      })
+      assert(bytesPerSum == 1024)
+    } finally FileSystem.closeAllForUGI(ugi)
+  }
+
   test("micro-batch offsets, commits and state deltas keep their .crc siblings") {
     import spark.implicits._
     val ck = Files.createTempDirectory("nio_ck").toFile

@@ -8,14 +8,19 @@ with the sf parquet tables registered as views, load the Spark parquet
 result, canonicalize both (columns sorted by name, rows sorted, doubles
 rounded to 9 significant digits), and diff. When the rounded forms
 differ, the rows are compared one by one with doubles within half a unit
-of the ninth significant digit, as perfbench/checks.py does: rounding
-first reports two doubles one ulp apart as different when they straddle
-a rounding boundary.
+of the ninth significant digit and column types equal: rounding first
+reports two doubles one ulp apart as different when they straddle a
+rounding boundary.
 """
 import sys, json, glob, os
 import duckdb
 import pandas as pd
 import numpy as np
+
+
+def r9(x):
+    if pd.isna(x) or x == 0: return x
+    return float(f"{x:.9g}")
 
 
 def canon(df, round_doubles=True):
@@ -24,9 +29,6 @@ def canon(df, round_doubles=True):
         if df[c].dtype == object:
             df[c] = df[c].astype(str)
         elif np.issubdtype(df[c].dtype, np.floating):
-            def r9(x):
-                if pd.isna(x) or x == 0: return x
-                return float(f"{x:.9g}")
             df[c] = df[c].map(r9) if round_doubles else df[c].astype("float64")
         elif np.issubdtype(df[c].dtype, np.datetime64):
             df[c] = df[c].astype("datetime64[ms]").astype("int64")
@@ -38,26 +40,30 @@ def canon(df, round_doubles=True):
     return df
 
 
+def within_9_digits(x, y):
+    """Elementwise over two float arrays: both NaN, equal once rounded to
+    nine significant digits, or apart by at most half a unit of the ninth
+    significant digit of the larger magnitude."""
+    rounded = np.array([r9(v) for v in x]) == np.array([r9(v) for v in y])
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        half_unit = 0.5 * 10.0 ** (np.floor(np.log10(np.maximum(np.abs(x), np.abs(y)))) - 8)
+        near = np.isfinite(x) & np.isfinite(y) & (np.abs(x - y) <= half_unit)
+    return (np.isnan(x) & np.isnan(y)) | rounded | near
+
+
 def agree_to_9_digits(a, b):
-    """Row by row, doubles within half a unit of the ninth significant
-    digit and every other value equal; rows are matched after sorting on
-    the other columns first, then on the unrounded doubles."""
+    """Row by row, doubles `within_9_digits` and every other value equal;
+    rows are matched after sorting on the other columns first, then on
+    the unrounded doubles. The caller has checked that the columns, their
+    types and the row counts match."""
     a, b = canon(a, round_doubles=False), canon(b, round_doubles=False)
-    if list(a.columns) != list(b.columns) or len(a) != len(b):
-        return False
-    doubles = [c for c in a.columns if np.issubdtype(a[c].dtype, np.floating)
-               and np.issubdtype(b[c].dtype, np.floating)]
+    doubles = [c for c in a.columns if np.issubdtype(a[c].dtype, np.floating)]
     keys = [c for c in a.columns if c not in doubles] + doubles
     a = a.sort_values(by=keys, kind="mergesort").reset_index(drop=True)
     b = b.sort_values(by=keys, kind="mergesort").reset_index(drop=True)
     for c in a.columns:
         x, y = a[c].to_numpy(), b[c].to_numpy()
-        if c in doubles:
-            with np.errstate(invalid="ignore"):
-                ok = (np.isnan(x) & np.isnan(y)) | (
-                    np.abs(x - y) <= 5e-9 * np.maximum(np.abs(x), np.abs(y)))
-        else:
-            ok = (x == y) | (pd.isna(x) & pd.isna(y))
+        ok = within_9_digits(x, y) if c in doubles else (x == y) | (pd.isna(x) & pd.isna(y))
         if not ok.all():
             return False
     return True
@@ -68,6 +74,8 @@ def compare(duck, spark):
     a, b = canon(duck), canon(spark)
     if list(a.columns) != list(b.columns):
         return f"columns duck={list(a.columns)} spark={list(b.columns)}"
+    if not a.dtypes.equals(b.dtypes):
+        return f"types duck={a.dtypes.to_dict()} spark={b.dtypes.to_dict()}"
     if len(a) != len(b):
         return f"rows duck={len(a)} spark={len(b)}"
     if a.equals(b) or agree_to_9_digits(duck, spark):
