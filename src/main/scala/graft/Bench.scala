@@ -28,7 +28,7 @@ object Bench {
     * micro-batch planner, state-store machinery and streaming sink paths
     * JIT separately from the batch engine, and without this the first
     * streaming entry in a session absorbs all of it (measured: s01
-    * 7.9 s cold vs 3.7 s warm; standalone `BenchOne s09` 4.2 s vs 2.3 s
+    * 7.9 s cold vs 3.7 s warm; standalone `Tool time s09` 4.2 s vs 2.3 s
     * after any streaming entry). */
   private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
     try SparkEntry.queries("q14_minute_agg")(spark, sfDir).count()
@@ -67,6 +67,19 @@ object Bench {
       Left(Option(e.getMessage).getOrElse(e.getClass.getName)
         .takeWhile(_ != '\n').take(200))
     } finally releaseScratchBlocks(spark)
+  }
+
+  /** Warm repeats per entry: `SPARK_GRAFT_BENCH_RUNS`, default 3. */
+  private[graft] def runs: Int = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
+    .flatMap(_.toIntOption).filter(_ > 0).getOrElse(3)
+
+  /** [[timeEntry]] repeated [[runs]] times: every run's seconds in run
+    * order (first = coldest), or the first failure. */
+  private[graft] def timeRuns(spark: SparkSession, sfDir: String,
+                              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : Either[String, Seq[Double]] = {
+    val results = (1 to runs).map(_ => timeEntry(spark, sfDir, fn))
+    results.collectFirst { case Left(e) => e }.toLeft(results.collect { case Right(s) => s })
   }
 
   /** Drop per-operator scratch state between entries. `localCheckpoint`
@@ -131,10 +144,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     warmup(spark, sfDir)
     // A failed query must never masquerade as a fast success: failures are
     // excluded from timings and reported in an explicit "errors" map.
@@ -143,10 +153,8 @@ object Bench {
     // warm session, repeated timed runs, median reported) so a one-run
     // scheduler/GC spike is self-diagnosing from the artifact — median
     // vs min separates a real regression from harness noise without a
-    // manual BenchOne session. The headline per-entry figure stays the
+    // manual `Tool time` session. The headline per-entry figure stays the
     // MEDIAN; min and run count ride alongside in "stats".
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(3)
 
     def loadAvg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
@@ -172,11 +180,10 @@ object Bench {
       if (idx > 0 && idx % CanaryEvery == 0)
         canarySamples += ((idx, cpuCanaryMs(), ioCanaryMs()))
       sweepIdx(name) = idx
-      val results = (1 to runs).map(_ => timeEntry(spark, sfDir, fn))
-      val secs = results.collect { case Right(s) => s }.sorted
-      results.collectFirst { case Left(e) => e } match {
-        case Some(err) => errors(name) = err
-        case None =>
+      timeRuns(spark, sfDir, fn) match {
+        case Left(err) => errors(name) = err
+        case Right(runSecs) =>
+          val secs = runSecs.sorted
           timings(name) = secs(secs.size / 2)
           mins(name) = secs.head
       }

@@ -72,7 +72,10 @@ object GraftSession {
     if (fs.getConf eq conf) fs.close()
   }
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
+  /** Every main's session: `local[cores]` through [[configure]]. `cores`
+    * defaults to `SPARK_GRAFT_CPUS` when set, else the host's processors. */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+              .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
     val s = configure(SparkSession.builder().master(s"local[$cores]"), cores.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

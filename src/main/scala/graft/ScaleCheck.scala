@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -147,33 +146,17 @@ object ScaleCheck {
     val src = args(0); val dst = args(1)
     val cliques = args(2).startsWith("cliques:")
     val k = args(2).stripPrefix("cliques:").toInt
-    val prefixes = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // diagnostic conf overrides (same contract as StageShuffle), e.g.
-    // SPARK_GRAFT_CONF="spark.sql.shuffle.partitions=128" for the
-    // bounded-heap experiments — smaller partitions per concurrent task
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(c, v) = kv.split("=", 2); spark.conf.set(c, v) })
+    val entries = Tool.select(args.drop(3).toSeq)
+    val spark = Tool.session()
 
     scaleDir(spark, src, dst, k, cliques)
 
-    // stage-level shuffle-write accounting; listener events drain async,
-    // so settle briefly after each entry before reading the counter
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    // records too: bytes are post-compression, so a synthetic fixture
-    // whose k-x vocabulary compresses worse than the 1x one (the
-    // suffixed-word corpus) inflates the byte ratio while the ROW ratio
-    // stays honest — report both, diagnose on rows
-    val shuffleRecs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        shuffleRecs.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-    })
+    // stage-level shuffle-write accounting, bytes AND records: bytes are
+    // post-compression, so a synthetic fixture whose k-x vocabulary
+    // compresses worse than the 1x one (the suffixed-word corpus)
+    // inflates the byte ratio while the ROW ratio stays honest — report
+    // both, diagnose on rows
+    val profile = StageProfile.attach(spark)
     // NO scan-bytes column (r15): both candidate counters were
     // calibrated against known parquet sizes and found blind to this
     // build's local vectorized scans — stage
@@ -189,28 +172,22 @@ object ScaleCheck {
     val stateListener = new graft.streaming.PipelineMetrics.MetricsListener
     spark.streams.addListener(stateListener)
     def measure(fn: (SparkSession, String) => DataFrame, dir: String): (Double, Long, Long, Long) = {
-      Thread.sleep(300)
-      val b0 = shuffleBytes.get()
-      val r0 = shuffleRecs.get()
       val n0 = stateListener.batches.size
-      val sec = Bench.timeEntry(spark, dir, fn)
-        .fold(err => { println(s"  FAILED: $err"); Double.NaN }, identity)
-      Thread.sleep(300)
+      val (sec, w) = profile.measure(Bench.timeEntry(spark, dir, fn)
+        .fold(err => { println(s"  FAILED: $err"); Double.NaN }, identity))
       val peakState = stateListener.batches.drop(n0)
         .foldLeft(0L)((m, b) => math.max(m, b.state_rows))
-      (sec, shuffleBytes.get() - b0, shuffleRecs.get() - r0, peakState)
+      (sec, w.shuffleBytes, w.shuffleRecords, peakState)
     }
 
     Bench.warmup(spark, src)
     println(f"${"entry"}%-28s ${"t_1x"}%8s ${"t_kx"}%8s ${"ratio"}%6s ${"shfl_1x"}%10s ${"shfl_kx"}%10s ${"shfl_r"}%6s ${"rows_r"}%6s ${"st_1x"}%9s ${"st_kx"}%9s")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => prefixes.isEmpty || prefixes.exists(n.startsWith) }
-      .foreach { case (name, fn) =>
-        val (t1, s1, r1, st1) = measure(fn, src)
-        val (tk, sk, rk, stk) = measure(fn, dst)
-        val mb = (b: Long) => f"${b / 1048576.0}%.1fM"
-        println(f"$name%-28s $t1%8.2f $tk%8.2f ${tk / t1}%6.2f ${mb(s1)}%10s ${mb(sk)}%10s ${if (s1 > 0) f"${sk.toDouble / s1}%6.2f" else "   n/a"} ${if (r1 > 0) f"${rk.toDouble / r1}%6.2f" else "   n/a"} $st1%9d $stk%9d")
-      }
+    entries.foreach { case (name, fn) =>
+      val (t1, s1, r1, st1) = measure(fn, src)
+      val (tk, sk, rk, stk) = measure(fn, dst)
+      val mb = (b: Long) => f"${b / 1048576.0}%.1fM"
+      println(f"$name%-28s $t1%8.2f $tk%8.2f ${tk / t1}%6.2f ${mb(s1)}%10s ${mb(sk)}%10s ${if (s1 > 0) f"${sk.toDouble / s1}%6.2f" else "   n/a"} ${if (r1 > 0) f"${rk.toDouble / r1}%6.2f" else "   n/a"} $st1%9d $stk%9d")
+    }
     // driver memory posture: sum of per-pool heap peaks — an UPPER
     // BOUND, not concurrent usage: G1 trades regions between eden/old
     // over time, so the pool peaks need not coexist and the sum can

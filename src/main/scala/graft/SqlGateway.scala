@@ -1068,10 +1068,7 @@ object SqlGateway {
     val timeoutSec = sys.env.get("GRAFT_GATEWAY_TIMEOUT_SEC")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(300)
     val metricsDir = sys.env.get("GRAFT_GATEWAY_METRICS_DIR")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     register(spark, dir)
     val gw = serve(spark, port, bindAll, timeoutSec, metricsDir, Some(dir))
     println(s"graft SQL gateway on :${gw.port} " +

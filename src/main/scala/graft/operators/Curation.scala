@@ -291,7 +291,8 @@ object Curation {
     * prunes non-matching posting lists at the SCAN; beyond it the serve
     * falls back to the s36 broadcast left-semi prune, which bounds
     * merge-input ROWS without a literal list in the plan. Crossover
-    * MEASURED (BmRouteCrossover on the 100× store — 11.6M posting rows,
+    * MEASURED (COVERAGE.md's BM25 route-crossover row: a since-deleted
+    * receipt harness on the 100× store — 11.6M posting rows,
     * 500k docs; min of 2 warm serves per point): IN wins at streaming
     * widths (32 terms: 1.26 s vs 1.79 s semi; 128: 1.51 vs 1.98) and
     * ties at ~256 (1.72 vs 1.67); beyond it the literal list's

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TopKAggregator, VectorFunctions}
+import graft.streaming.StreamingQueries.inParallel
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -641,11 +642,9 @@ object SimilaritySearch {
         .localCheckpoint()
     // the two projection pins are independent (items vs queries) →
     // overlap the materialization jobs (guide §2.6)
-    var itP: DataFrame = null
-    var qP: DataFrame = null
-    graft.streaming.StreamingQueries.inParallel(
-      () => itP = projected(items, "vec_id"),
-      () => qP = projected(queries, "query_id"))
+    val Seq(itP, qP) = inParallel(
+      () => projected(items, "vec_id"),
+      () => projected(queries, "query_id"))
     val shortlist = ivfTopK(spark,
         itP.select(col("vec_id"), col("pvec")),
         qP.select(col("query_id").as("vec_id"), col("pvec")),
@@ -779,7 +778,7 @@ object SimilaritySearch {
       else it.sample(withReplacement = false,
         math.min(1.0, maxFitRows.toDouble / total * 1.05), seed)
     val fitDf = fitInput.select((0 until m).map(subCol): _*).localCheckpoint()
-    val models = fitSubspaceModels(fitDf, m, codes, seed)
+    val models = inParallel(subspaceFits(fitDf, m, codes, seed): _*)
 
     // encode: ONE pass over the corpus, m nearest-centroid assignments;
     // everything downstream of this line touches codes, not vectors
@@ -830,19 +829,16 @@ object SimilaritySearch {
     topKPerQuery(reranked.select(col("query_id"), col("vec_id"), col("cosine")), k)
   }
 
-  /** The m independent per-subspace codebook fits, submitted CONCURRENTLY:
+  /** The m independent per-subspace codebook fits, for [[inParallel]]:
     * each is a small seeded k-means over the (localCheckpointed, bounded)
-    * fit sample, so the driver-side Future fan-out just lets the scheduler
+    * fit sample, so running them as lanes just lets the scheduler
     * overlap their jobs — measured as the dominant cost of x45 when run
     * sequentially. Seeds are per-subspace, so results are identical to the
     * sequential fit. */
-  private def fitSubspaceModels(fitDf: DataFrame, m: Int, codes: Int, seed: Long)
-      : Seq[org.apache.spark.ml.clustering.KMeansModel] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+  private def subspaceFits(fitDf: DataFrame, m: Int, codes: Int, seed: Long)
+      : Seq[() => org.apache.spark.ml.clustering.KMeansModel] = {
     import org.apache.spark.ml.clustering.KMeans
-    Await.result(Future.sequence((0 until m).map { j => Future {
+    (0 until m).map { j => () =>
       // seeded RANDOM init, not k-means||: the parallel init's extra
       // sampling passes cost ~4 driver jobs per fit — at m fits × 10
       // iters the job-scheduling overhead, not the math, dominates this
@@ -853,7 +849,7 @@ object SimilaritySearch {
       new KMeans().setK(codes).setSeed(seed + j).setMaxIter(10)
         .setInitMode("random")
         .setFeaturesCol(s"__s$j").setPredictionCol(s"code_$j").fit(fitDf)
-    }}), Duration.Inf)
+    }
   }
 
   /** x46: IVF × PQ — the composed shape [[pqTopK]]'s doc promises
@@ -899,17 +895,12 @@ object SimilaritySearch {
     val fitDf = fitInput
       .select((col("__unit") +: (0 until m).map(subCol)): _*).localCheckpoint()
     // coarse quantizer and PQ codebooks are independent fits over the
-    // same checkpointed sample — overlap the coarse fit's jobs with the
-    // subspace fan-out instead of paying it serially up front
-    val coarseF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(new KMeans().setK(nLists).setSeed(seed).setMaxIter(10)
-        .setFeaturesCol("__unit").setPredictionCol("list").fit(fitDf))
-    }
-    val pqModels = fitSubspaceModels(fitDf, m, codes, seed)
-    val coarse = scala.concurrent.Await.result(
-      coarseF, scala.concurrent.duration.Duration.Inf)
+    // same checkpointed sample — one fan-out overlaps the coarse fit's
+    // jobs with the subspace fits instead of paying it serially up front
+    val coarse +: pqModels = inParallel(
+      (() => new KMeans().setK(nLists).setSeed(seed).setMaxIter(10)
+        .setFeaturesCol("__unit").setPredictionCol("list").fit(fitDf)) +:
+        subspaceFits(fitDf, m, codes, seed): _*)
 
     // ONE corpus pass: coarse cell + the m code assignments together
     val withSubs = it.select(

@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.StreamingQueries
+
 /** The storage layer (SURVEY.md §2.B B1–B5 / §4 O1–O3): partitioned,
   * sorted, bloom-indexed parquet standing in for the reference's MergeTree
   * layout (clickhouse_tables.sql:16-19,105-108).
@@ -178,8 +180,9 @@ object EventStore {
     * and rename the temp into place — the same two-phase shape a real
     * warehouse compactor uses, and the Hadoop FS API keeps it portable
     * (local/HDFS/S3A). Each partition is an independent unit of work,
-    * and they RUN as separate concurrent Spark jobs (`jobParallelism`
-    * driver threads submitting to the shared scheduler): a compactor
+    * and they RUN as separate concurrent Spark jobs (the lanes of
+    * [[graft.streaming.StreamingQueries.inParallel]], up to 8 driver
+    * threads submitting to the shared scheduler): a compactor
     * that rewrites thousands of small partitions one job at a time pays
     * fixed scheduling latency per partition serially — measured 9.7 s →
     * ~1.5 s over 29 day-partitions at sf0.1 — while the per-partition
@@ -188,8 +191,7 @@ object EventStore {
     * Returns (partition value, files before, files after) for the
     * partitions that were rewritten. */
   def compact(spark: SparkSession, warehouseDir: String, grain: String,
-              targetFileBytes: Long = 128L << 20,
-              jobParallelism: Int = 8): Seq[(String, Int, Int)] = {
+              targetFileBytes: Long = 128L << 20): Seq[(String, Int, Int)] = {
     val root = new Path(warehouseDir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(root), s"compaction root does not exist: $warehouseDir")
@@ -227,41 +229,22 @@ object EventStore {
       }
     if (work.isEmpty) return Seq.empty
 
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(jobParallelism, work.size))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = work.map { case (dir, value, before, target) =>
-        scala.concurrent.Future {
-          val tmp = new Path(root, s".compact_tmp_$value")
-          spark.read.parquet(dir.toString)
-            .repartitionByRange(target, col("ts"))
-            .sortWithinPartitions(col("ts"))
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#user_id", "true")
-            .option("parquet.bloom.filter.enabled#page", "true")
-            .parquet(tmp.toString)             // materialized BEFORE the swap
-          fs.delete(dir, true)
-          fs.rename(tmp, dir)
-          (value, before, dataFiles(dir).length)
-        }
-      }
-      // settle EVERY task before returning or throwing: a fail-fast await
-      // would leave rewrite tasks mutating partition dirs in the
-      // background after compact() has already raised, racing any retry
-      val settled = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          futures.map(_.transform(scala.util.Success(_)))),
-        scala.concurrent.duration.Duration.Inf)
-      val failures = settled.collect { case scala.util.Failure(e) => e }
-      if (failures.nonEmpty) {
-        val head = failures.head
-        failures.tail.foreach(head.addSuppressed)
-        throw head
-      }
-      settled.collect { case scala.util.Success(r) => r }
-    } finally pool.shutdown()
+    // settle EVERY rewrite before returning or throwing: a fail-fast
+    // await would leave rewrites mutating partition dirs in the
+    // background after compact() has already raised, racing any retry
+    StreamingQueries.inParallel(work.map { case (dir, value, before, target) => () =>
+      val tmp = new Path(root, s".compact_tmp_$value")
+      spark.read.parquet(dir.toString)
+        .repartitionByRange(target, col("ts"))
+        .sortWithinPartitions(col("ts"))
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#user_id", "true")
+        .option("parquet.bloom.filter.enabled#page", "true")
+        .parquet(tmp.toString)             // materialized BEFORE the swap
+      fs.delete(dir, true)
+      fs.rename(tmp, dir)
+      (value, before, dataFiles(dir).length)
+    }: _*)
   }
 
   /** B3: drop whole partitions whose entire grain is older than

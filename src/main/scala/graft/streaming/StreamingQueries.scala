@@ -52,9 +52,16 @@ object StreamingQueries {
     * a crash exposes is a state the per-store recovery already handles
     * (the same argument the restart specs rely on). After all actions
     * settle, the first failure (in argument order) is thrown with every
-    * later one attached as suppressed — none is dropped. */
-  private[graft] def inParallel(work: (() => Unit)*): Unit =
-    if (work.sizeIs <= 1) work.foreach(_.apply())
+    * later one attached as suppressed — none is dropped; otherwise the
+    * results come back in argument order.
+    *
+    * This is the program's one driver-side fan-out. Its pool is made per
+    * call, so every lane thread is created by the caller's thread and
+    * inherits its Spark job group (the gateway's timeout cancel relies on
+    * that); a shared pool's threads keep the group of whichever thread
+    * first created them. */
+  private[graft] def inParallel[T](work: (() => T)*): Seq[T] =
+    if (work.sizeIs <= 1) work.map(_.apply())
     else {
       // pool capped (VERDICT r20 #7): this is a driver-job overlap
       // helper, not a task executor — a handful of in-flight jobs is
@@ -64,17 +71,19 @@ object StreamingQueries {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(work.size, 8))
       try {
-        val futs = work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = w()
+        val futs = work.map(w => pool.submit(new java.util.concurrent.Callable[T] {
+          def call(): T = w()
         }))
-        val failures = futs.flatMap { f =>
-          try { f.get(); None }
-          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        val settled = futs.map { f =>
+          try Right(f.get())
+          catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
         }
+        val failures = settled.collect { case Left(e) => e }
         failures.headOption.foreach { first =>
           failures.tail.filter(_ ne first).foreach(first.addSuppressed)
           throw first
         }
+        settled.collect { case Right(r) => r }
       } finally pool.shutdown()
     }
 
@@ -645,8 +654,8 @@ object StreamingQueries {
   // preserves partitioning/ordering through LogicalRDD), so a micro-
   // batch never re-shuffles or re-sorts the reference — only its own
   // exploded shingles exchange per batch. r8's 8.0× wall at 30× corpus
-  // had TWO per-batch floors, both removed in r10 (measured by
-  // StageShuffle's per-stage wall attribution): the dominant one was the
+  // had TWO per-batch floors, both removed in r10 (measured by the
+  // per-stage wall attribution of `Tool stages`): the dominant one was the
   // one-file micro-batch mapping to ONE input partition, serializing the
   // shingle kernel per batch (fixed by a batch-sized repartition before
   // the explode — 114.7 s → 24.3 s at 30× in the profiling run); the
@@ -1593,9 +1602,9 @@ object StreamingQueries {
 
   /** The one-time BM25 inverted-index build — ONE definition of the
     * serving-index format, shared by s38, the s39 hybrid's lexical arm,
-    * the gateway /search build, and the BmRouteCrossover harness (four
-    * hand-kept copies would let a tokenizer or dl-semantics change
-    * silently desync the gateway from the hash-checked stream path).
+    * and the gateway /search build (hand-kept copies would let a
+    * tokenizer or dl-semantics change silently desync the gateway from
+    * the hash-checked stream path).
     * Postings (doc_id, token, tf, dl) written bucketed+sorted on token
     * at `$whDir/tf`; df DERIVED from the postings store (tf rows are
     * (doc, token)-grain, so count-per-token IS df — and grouping the

@@ -101,6 +101,32 @@ class RegistrySpec extends AnyFunSuite {
         s"($n entries) in its first 10 lines — update the status block")
   }
 
+  test("mechanism guard: at most 6 mains, one SparkListener, no global ExecutionContext in src/main") {
+    // the driver-side tooling once grew to 12 mains, four private
+    // listeners and three fan-out mechanisms, one copy at a time; each
+    // count below is a place new tooling must reuse instead
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source root not found from cwd ${System.getProperty("user.dir")}")
+    val walk = java.nio.file.Files.walk(root)
+    val sources = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".scala")).map { p =>
+        root.relativize(p).toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      }.toSeq
+    } finally walk.close()
+    def where(pattern: String): Seq[String] = sources.flatMap { case (f, src) =>
+      pattern.r.findAllMatchIn(src).map(_ => f)
+    }
+    val mains = where("""\bdef\s+main\s*\(""")
+    assert(mains.size <= 6, s"${mains.size} main objects (at most 6): ${mains.sorted.mkString(", ")}")
+    val listeners = where("""\b(extends|new|with)\s+SparkListener\b""")
+    assert(listeners.size == 1,
+      s"expected the one SparkListener (StageProfile), found: ${listeners.sorted.mkString(", ")}")
+    val globalEc = where("""ExecutionContext\.Implicits\.global""")
+    assert(globalEc.isEmpty, s"ExecutionContext.Implicits.global in: ${globalEc.mkString(", ")}")
+  }
+
   test("oracle SQL strings are non-empty and DuckDB-shaped (no Spark-only syntax)") {
     SparkEntry.oracleSql.foreach { case (name, sql) =>
       assert(sql.trim.nonEmpty, s"$name: empty oracle")

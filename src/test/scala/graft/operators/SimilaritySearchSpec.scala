@@ -322,6 +322,40 @@ class SimilaritySearchSpec extends AnyFunSuite {
     assert(pq == pairs(SimilaritySearch.pqTopK(spark, emb, queries, k = 10)))
   }
 
+  test("pq and ivf-pq k-means fits run in the caller's job group (gateway cancel reaches them)") {
+    VectorFunctions.register(spark)
+    val sc = spark.sparkContext
+    val emb = spark.read.parquet(s"${TestSpark.Sf0001}/embeddings.parquet")
+    val queries = emb.filter(col("vec_id") < 5)
+    def runIn(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try {
+        SimilaritySearch.pqTopK(spark, emb, queries, k = 5).collect()
+        SimilaritySearch.ivfPqTopK(spark, emb, queries, k = 5).collect()
+      } finally sc.clearJobGroup()
+    }
+    // the first call leaves behind whatever lane threads a shared pool
+    // would keep; every job of the second must still carry its group
+    runIn("pq-group-a")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      runIn("pq-group-b")
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == "pq-group-b"),
+      s"${seen.count(_ != "pq-group-b")} of ${seen.size} jobs outside the caller's group: " +
+        seen.distinct.mkString(", "))
+  }
+
   test("pq paths survive short codebooks (duplicate-heavy corpus, < codes distinct)") {
     import spark.implicits._
     VectorFunctions.register(spark)

@@ -1414,6 +1414,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("lane 2"))
   }
 
+  test("inParallel: lane results come back in argument order") {
+    assert(StreamingQueries.inParallel((0 until 12).map(i => () => { Thread.sleep(12 - i); i }): _*)
+      == (0 until 12))
+    assert(StreamingQueries.inParallel(() => "one") == Seq("one"))
+  }
+
   test("s32 streamed embedding health == batch x91 (algebraic partials merge exactly)") {
     val embs = graft.Tables.embeddings(spark, graft.TestSpark.Sf0001)
     val streamed = StreamingQueries.embeddingHealthStream(spark, embs)
